@@ -169,7 +169,7 @@ class EdgeCasesSpec extends SparkSuite {
     import java.nio.file.{Files, Paths}
     val out = Files.createTempDirectory("stale").toString
     Files.writeString(Paths.get(s"$out/b.txt"), "bogus:[9]\n") // stale prior content
-    graft.operators.InvertedIndex.run(spark, "/root/reference/checker/test_small.txt", out)
+    graft.operators.InvertedIndex.run(spark, CorpusSmall.manifest, out)
     // small corpus HAS b-words, so b.txt must now hold only fresh lines
     val b = Files.readAllLines(Paths.get(s"$out/b.txt"))
     assert(!b.contains("bogus:[9]") && b.size > 0)
@@ -179,8 +179,8 @@ class EdgeCasesSpec extends SparkSuite {
 
   test("inverted index on a corpus where a letter is empty still writes 26 files") {
     val out = java.nio.file.Files.createTempDirectory("idx_edge").toString
-    // the small reference corpus has no 'd' words — re-verify the invariant here
-    graft.operators.InvertedIndex.run(spark, "/root/reference/checker/test_small.txt", out)
+    // the small corpus has no 'd' words — re-verify the invariant here
+    graft.operators.InvertedIndex.run(spark, CorpusSmall.manifest, out)
     assert(('a' to 'z').forall(c => new java.io.File(s"$out/$c.txt").exists()))
   }
 

@@ -1,51 +1,66 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import graft.operators.InvertedIndex
 
-/** Golden parity against the reference's own committed outputs
-  * (`/root/reference/checker/test_out_small/` — the same corpus its
-  * checker.sh grades with `diff -w`). The full 355-file corpus parity
-  * is exercised by the CLI runner (see README); this spec keeps the
-  * fast small-corpus gate in `sbt test`. */
+/** Golden parity for the small-corpus gate the reference's checker.sh
+  * grades with `diff -w` over all 26 letter files. Each golden test
+  * always runs the committed corpus (`CorpusSmall`, FIXTURES.md §A.4)
+  * against its hand-derived `test_out_small/`; where the reference
+  * checkout's `checker/test_small.txt` exists, it also runs the
+  * reference's own small corpus against the reference's committed
+  * `test_out_small/`. The full 355-file corpus parity is exercised by
+  * the CLI runner (see README). */
 class InvertedIndexParitySpec extends SparkSuite {
+
+  private val refChecker = Paths.get("/root/reference/checker")
+
+  /** (manifest, golden dir): the committed fixture, then the reference's
+    * own small corpus where its checkout is present. */
+  private val corpora: Seq[(String, Path)] =
+    (CorpusSmall.manifest, CorpusSmall.golden) +:
+      Seq(refChecker.resolve("test_small.txt")).filter(Files.exists(_))
+        .map(m => (m.toString, refChecker.resolve("test_out_small")))
 
   private def canon(lines: Seq[String]): Seq[String] =
     lines.map(_.trim.replaceAll("\\s+", " ")).filter(_.nonEmpty)
 
   test("small corpus matches reference golden output for all 26 letters") {
-    val out = Files.createTempDirectory("idx_small").toString
-    InvertedIndex.run(spark, "/root/reference/checker/test_small.txt", out)
-    ('a' to 'z').foreach { c =>
-      val golden = Paths.get(s"/root/reference/checker/test_out_small/$c.txt")
-      val ours = Paths.get(s"$out/$c.txt")
-      assert(Files.exists(ours), s"$c.txt missing — empty letters must materialize")
-      assert(
-        canon(Files.readAllLines(ours).asScala.toSeq) ===
-          canon(Files.readAllLines(golden).asScala.toSeq),
-        s"letter $c differs from golden")
+    corpora.foreach { case (manifest, goldenDir) =>
+      val out = Files.createTempDirectory("idx_small").toString
+      InvertedIndex.run(spark, manifest, out)
+      ('a' to 'z').foreach { c =>
+        val golden = goldenDir.resolve(s"$c.txt")
+        val ours = Paths.get(s"$out/$c.txt")
+        assert(Files.exists(ours), s"$c.txt missing — empty letters must materialize")
+        assert(
+          canon(Files.readAllLines(ours).asScala.toSeq) ===
+            canon(Files.readAllLines(golden).asScala.toSeq),
+          s"letter $c differs from golden $goldenDir")
+      }
     }
   }
 
   test("letter sink accepts a file: URI outDir (Hadoop-FS writer path)") {
-    val outLocal = Files.createTempDirectory("idx_uri").toString
-    InvertedIndex.run(spark, "/root/reference/checker/test_small.txt",
-      "file:" + outLocal)
-    ('a' to 'z').foreach { c =>
-      val golden = Paths.get(s"/root/reference/checker/test_out_small/$c.txt")
-      val ours = Paths.get(s"$outLocal/$c.txt")
-      assert(Files.exists(ours), s"$c.txt missing under file: URI outDir")
-      assert(
-        canon(Files.readAllLines(ours).asScala.toSeq) ===
-          canon(Files.readAllLines(golden).asScala.toSeq),
-        s"letter $c differs from golden under file: URI outDir")
+    corpora.foreach { case (manifest, goldenDir) =>
+      val outLocal = Files.createTempDirectory("idx_uri").toString
+      InvertedIndex.run(spark, manifest, "file:" + outLocal)
+      ('a' to 'z').foreach { c =>
+        val golden = goldenDir.resolve(s"$c.txt")
+        val ours = Paths.get(s"$outLocal/$c.txt")
+        assert(Files.exists(ours), s"$c.txt missing under file: URI outDir")
+        assert(
+          canon(Files.readAllLines(ours).asScala.toSeq) ===
+            canon(Files.readAllLines(golden).asScala.toSeq),
+          s"letter $c differs from golden $goldenDir under file: URI outDir")
+      }
     }
   }
 
   test("manifest read: 1-based ids in manifest order") {
-    val files = InvertedIndex.readManifest("/root/reference/checker/test_small.txt")
+    val files = InvertedIndex.readManifest(CorpusSmall.manifest)
     assert(files.map(_._2) === Seq(1, 2, 3))
     assert(files.head._1.endsWith("test_in_small/file1.txt"))
   }

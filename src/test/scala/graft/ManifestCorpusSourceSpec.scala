@@ -7,7 +7,7 @@ import graft.operators.InvertedIndex
 /** The manifest-corpus DataSource V2 connector: row parity with the
   * built-in text source, partition packing, and column pruning. */
 class ManifestCorpusSourceSpec extends SparkSuite {
-  private val manifest = "/root/reference/checker/test_small.txt"
+  private val manifest = CorpusSmall.manifest
 
   test("V2 scan rows match the built-in text source formulation") {
     val v2 = spark.read.format("manifest-corpus").load(manifest)
