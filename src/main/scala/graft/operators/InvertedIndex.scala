@@ -112,9 +112,18 @@ object InvertedIndex {
     * 0-byte files.
     *
     * All heavy work (tokenize/dedup/group) stays distributed; the
-    * write repartitions on the letter key so each letter's rows land in
-    * exactly one task, which streams them out in sorted order. The
-    * driver only touches missing (empty) letters.
+    * write hash-repartitions on the letter key at the session's shuffle
+    * partition count, which AQE may coalesce but never splits, so all of
+    * a letter's rows land in one task. A task sorts its rows by (letter,
+    * cnt DESC, word) and streams them out, opening the next letter's
+    * file where the letter changes: a small index takes a task or two,
+    * not 26. The driver only touches missing (empty) letters.
+    *
+    * Files are created through the raw filesystem under a checksum
+    * layer ([[graft.sources.ManifestCorpusSource.rawFs]]), so a local
+    * `outDir` holds exactly the 26 files and no `.crc` sidecars. The
+    * pre-write delete goes through the checksummed filesystem, which
+    * also removes the sidecars an older run left behind.
     *
     * CLUSTER-READY: executors write through the Hadoop FileSystem API
     * (the session's conf shipped via [[graft.sources.SerializableHadoopConf]],
@@ -134,7 +143,7 @@ object InvertedIndex {
     ('a' to 'z').foreach(c =>
       fs.delete(new org.apache.hadoop.fs.Path(outPath, s"$c.txt"), false))
     index
-      .repartition(26, col("letter"))
+      .repartition(col("letter"))
       .sortWithinPartitions(col("letter"), col("cnt").desc, col("word"))
       .select("letter", "line")
       .foreachPartition { it: Iterator[Row] =>
@@ -143,8 +152,8 @@ object InvertedIndex {
         // resolve the FS on the executor from the shipped conf — never
         // from a driver-captured FileSystem (not serializable, and the
         // executor may need different credentials/caches)
-        lazy val efs = new org.apache.hadoop.fs.Path(outDir)
-          .getFileSystem(conf.value)
+        lazy val efs = graft.sources.ManifestCorpusSource.rawFs(
+          new org.apache.hadoop.fs.Path(outDir).getFileSystem(conf.value))
         it.foreach { r =>
           val letter = r.getString(0)
           if (letter != cur) {
@@ -160,7 +169,7 @@ object InvertedIndex {
       }
     ('a' to 'z').foreach { c =>
       val p = new org.apache.hadoop.fs.Path(outPath, s"$c.txt")
-      if (!fs.exists(p)) fs.create(p, false).close()
+      if (!fs.exists(p)) graft.sources.ManifestCorpusSource.rawFs(fs).create(p, false).close()
     }
   }
 

@@ -23,11 +23,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * `spark.read.format("manifest-corpus").load(manifest)` yields
   * `(file_id INT, path STRING, value STRING)` — one row per corpus
   * line — with:
-  *  - **partition packing**: corpus files are binned into input
-  *    partitions by cumulative size (`maxPartitionBytes` option,
-  *    default 4 MiB) so thousands of small chapter files don't become
-  *    thousands of tasks — the same small-files discipline a 100 TB
-  *    ingest needs;
+  *  - **partition packing**: corpus files are packed into
+  *    byte-balanced input partitions, one per task slot once the corpus
+  *    holds a few MiB (never more partitions than files, and never
+  *    fewer than `total / maxPartitionBytes`; option default 4 MiB), so
+  *    thousands of small chapter files don't become thousands of tasks
+  *    and no slot idles while one bin of large files runs on. Files go
+  *    largest first to the lightest bin and keep manifest order within
+  *    it;
   *  - **column pruning** (SupportsPushDownRequiredColumns): a query
   *    projecting only `value` never materializes the other columns;
   *  - **fail-fast planning**: every corpus file is stat'ed through the
@@ -68,14 +71,53 @@ object ManifestCorpusSource {
     StructField("path", StringType, nullable = false),
     StructField("value", StringType, nullable = false)))
 
+  /** The filesystem under the checksum layer of local-style schemes
+    * (`ChecksumFileSystem`), or `fs` itself for every other scheme
+    * (HDFS, object stores), which keeps no `.crc` sidecars. */
+  private[graft] def rawFs(fs: FileSystem): FileSystem = fs match {
+    case cfs: ChecksumFileSystem => cfs.getRawFileSystem
+    case other => other
+  }
+
   /** Open `p` for read, bypassing the checksum layer on local-style
     * filesystems: corpus files have no `.crc` sidecars, and
     * `ChecksumFileSystem.open` pays an extra existence probe per file
-    * to discover that. Non-checksum filesystems (HDFS, object stores)
-    * open directly. */
-  private[sources] def openRaw(fs: FileSystem, p: HPath): InputStream = fs match {
-    case cfs: ChecksumFileSystem => cfs.getRawFileSystem.open(p)
-    case other => other.open(p)
+    * to discover that. */
+  private[sources] def openRaw(fs: FileSystem, p: HPath): InputStream = rawFs(fs).open(p)
+
+  /** Below this many bytes per bin a split is not worth a task. */
+  private val MinBinBytes = 1L << 20
+
+  /** Byte-balanced packing of `(file, bytes)` into input partitions,
+    * shared by the file-based scans. The bin count is
+    * `k = min(#files, max(⌈total / maxBytes⌉, min(slots, ⌈total / 1 MiB⌉)))`,
+    * `slots` being the active session's default parallelism (1 with no
+    * session): enough bins that their mean stays within `maxBytes`, and
+    * one per task slot once the input is big enough to be worth
+    * splitting. Files go largest first to the currently lightest bin
+    * (LPT), so the heaviest bin is at most `total / k + largest file`.
+    * Each bin keeps its files in input order, and bins are ordered by
+    * their first file. A 0-byte file weighs 1 byte, so it still gets a
+    * reader. */
+  private[sources] def packBalanced[A](files: Seq[(A, Long)], maxBytes: Long): Seq[Seq[A]] = {
+    if (files.isEmpty) return Seq.empty
+    val slots = org.apache.spark.sql.SparkSession.getActiveSession
+      .map(_.sparkContext.defaultParallelism).getOrElse(1)
+    val sizes = files.map(f => math.max(1L, f._2)).toArray
+    def ceilDiv(a: Long, b: Long): Long = (a - 1) / b + 1
+    val total = sizes.sum
+    val k = math.min(files.length.toLong, math.max(ceilDiv(total, math.max(1L, maxBytes)),
+      math.min(slots.toLong, ceilDiv(total, MinBinBytes)))).toInt
+    // (load, bin), lightest first; ties go to the lower bin
+    val lightest = scala.collection.mutable.PriorityQueue
+      .tabulate(k)(b => (0L, b))(Ordering[(Long, Int)].reverse)
+    val bins = Array.fill(k)(scala.collection.mutable.ArrayBuffer.empty[Int])
+    sizes.indices.sortBy(i => (-sizes(i), i)).foreach { i =>
+      val (load, b) = lightest.dequeue()
+      bins(b) += i
+      lightest.enqueue((load + sizes(i), b))
+    }
+    bins.toSeq.map(_.sorted).sortBy(_.head).map(_.map(i => files(i)._1).toSeq)
   }
 }
 
@@ -237,7 +279,7 @@ class ManifestCorpusScan(manifestPath: String, maxBytes: Long,
     // trick as Spark's InMemoryFileIndex listing): one SERIAL blocking
     // getFileStatus per entry would make planning O(files) round-trips —
     // hours for a 200k-file manifest on an object store with ~10-50 ms
-    // per HEAD. Order is preserved so binning stays manifest-ordered.
+    // per HEAD. Order is preserved so each bin stays manifest-ordered.
     val threads = math.min(32, math.max(1, files.length))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     val sizes: Seq[Long] =
@@ -273,29 +315,16 @@ class ManifestCorpusScan(manifestPath: String, maxBytes: Long,
     files.zip(sizes)
   }
 
-  /** Size-binned file groups: greedy packing in manifest order keeps
-    * partition count ≈ totalBytes / maxPartitionBytes instead of one
-    * task per (typically tiny) corpus file. Files failing the pushed
-    * or runtime filters are skipped ENTIRELY — a `file_id = k` probe
-    * or a DPP-filtered join opens one file, not the corpus. */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val partitions = scala.collection.mutable.ArrayBuffer.empty[CorpusFilesPartition]
-    var current = scala.collection.mutable.ArrayBuffer.empty[(String, Int)]
-    var bytes = 0L
-    stattedFiles.filter { case ((p, id), _) => keepFile(p, id) }
-      .foreach { case ((path, id), sz) =>
-      // 0-byte files still occupy one slot so they are assigned a reader
-      if (bytes > 0 && bytes + sz > maxBytes) {
-        partitions += CorpusFilesPartition(current.toSeq)
-        current = scala.collection.mutable.ArrayBuffer.empty
-        bytes = 0L
-      }
-      current += ((path, id))
-      bytes += sz
-    }
-    if (current.nonEmpty) partitions += CorpusFilesPartition(current.toSeq)
-    partitions.toArray
-  }
+  /** Byte-balanced file groups ([[ManifestCorpusSource.packBalanced]]):
+    * one partition per task slot for a corpus of a few MiB or more,
+    * instead of one task per (typically tiny) corpus file. Files failing
+    * the pushed or runtime filters are skipped ENTIRELY — a
+    * `file_id = k` probe or a DPP-filtered join opens one file, not the
+    * corpus. */
+  override def planInputPartitions(): Array[InputPartition] =
+    ManifestCorpusSource.packBalanced(
+      stattedFiles.filter { case ((p, id), _) => keepFile(p, id) }, maxBytes)
+      .map(CorpusFilesPartition(_)).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new ManifestCorpusReaderFactory(required, confCarrier, pushedLimit)

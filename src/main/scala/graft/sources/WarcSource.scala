@@ -31,12 +31,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *   content_length LONG, payload BINARY)`
   *
   * Connector discipline (the [[ManifestCorpusSource]] skills):
-  *  - **partition packing**: `.warc` / `.warc.gz` files are
-  *    size-binned into input partitions (`maxPartitionBytes`, default
-  *    128 MiB) — a crawl drop of thousands of files doesn't become
-  *    thousands of tasks, and one giant file still gets its own
-  *    reader. A single WARC file is never split below file
-  *    granularity: records are length-prefixed SEQUENTIALLY (and
+  *  - **partition packing**: `.warc` / `.warc.gz` files are packed
+  *    into byte-balanced input partitions, name-ordered within each
+  *    (the [[ManifestCorpusSource]] packer; `maxPartitionBytes`,
+  *    default 128 MiB, bounds the mean bin) — a crawl drop of
+  *    thousands of files doesn't become thousands of tasks, and one
+  *    giant file still gets its own reader. A single WARC file is
+  *    never split below file granularity: records are length-prefixed SEQUENTIALLY (and
   *    production WARCs are per-record gzip members), so mid-file seek
   *    points don't exist without an external index — the scale unit
   *    is the file, which is how every public crawl corpus is sharded
@@ -622,20 +623,8 @@ class WarcScan(path: String, maxBytes: Long, required: StructType,
         WarcPointPartition(f, hs.map(h => (h._2, h._3)).sortBy(_._1))
       }.toArray
     case None =>
-      val partitions = scala.collection.mutable.ArrayBuffer.empty[WarcFilesPartition]
-      var current = scala.collection.mutable.ArrayBuffer.empty[String]
-      var bytes = 0L
-      stattedFiles.foreach { case (f, sz) =>
-        if (bytes > 0 && bytes + sz > maxBytes) {
-          partitions += WarcFilesPartition(current.toSeq)
-          current = scala.collection.mutable.ArrayBuffer.empty
-          bytes = 0L
-        }
-        current += f
-        bytes += sz
-      }
-      if (current.nonEmpty) partitions += WarcFilesPartition(current.toSeq)
-      partitions.toArray
+      ManifestCorpusSource.packBalanced(stattedFiles, maxBytes)
+        .map(WarcFilesPartition(_)).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -709,21 +698,8 @@ class WarcMicroBatchStream(path: String, maxBytes: Long,
     val e = end.asInstanceOf[WarcOffset].lastFile
     val batchFiles = listFiles().filter { case (f, _) =>
       val n = nameOf(f); n > s && n <= e }
-    // same greedy size-binning as the batch scan
-    val partitions = scala.collection.mutable.ArrayBuffer.empty[WarcFilesPartition]
-    var current = scala.collection.mutable.ArrayBuffer.empty[String]
-    var bytes = 0L
-    batchFiles.foreach { case (f, sz) =>
-      if (bytes > 0 && bytes + sz > maxBytes) {
-        partitions += WarcFilesPartition(current.toSeq)
-        current = scala.collection.mutable.ArrayBuffer.empty
-        bytes = 0L
-      }
-      current += f
-      bytes += sz
-    }
-    if (current.nonEmpty) partitions += WarcFilesPartition(current.toSeq)
-    partitions.toArray
+    ManifestCorpusSource.packBalanced(batchFiles, maxBytes)
+      .map(WarcFilesPartition(_)).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

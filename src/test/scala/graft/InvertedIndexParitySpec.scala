@@ -59,6 +59,36 @@ class InvertedIndexParitySpec extends SparkSuite {
     }
   }
 
+  test("letter sink output is byte-equal to the golden at 1 and 64 shuffle partitions") {
+    // the sink inherits the session's shuffle partition count: every
+    // letter in one task, or letters spread thin over mostly empty ones
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val before = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      Seq(1, 64).foreach { n =>
+        spark.conf.set("spark.sql.shuffle.partitions", n.toLong)
+        val out = Files.createTempDirectory(s"idx_p$n")
+        InvertedIndex.run(spark, CorpusSmall.manifest, out.toString)
+        ('a' to 'z').foreach { c =>
+          assert(Files.readAllBytes(out.resolve(s"$c.txt")) sameElements
+            Files.readAllBytes(CorpusSmall.golden.resolve(s"$c.txt")),
+            s"letter $c differs from golden ${CorpusSmall.golden} at $n shuffle partitions")
+        }
+      }
+    } finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("letter sink writes exactly the 26 letter files, no .crc sidecars") {
+    val out = Files.createTempDirectory("idx_crc")
+    InvertedIndex.run(spark, CorpusSmall.manifest, out.toString)
+    val names = Files.list(out).iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+    assert(names === ('a' to 'z').map(c => s"$c.txt"))
+  }
+
   test("manifest read: 1-based ids in manifest order") {
     val files = InvertedIndex.readManifest(CorpusSmall.manifest)
     assert(files.map(_._2) === Seq(1, 2, 3))

@@ -33,6 +33,40 @@ class ManifestCorpusSourceSpec extends SparkSuite {
     assert(scattered.count() === packed.count())
   }
 
+  test("byte-balanced packing: one partition per slot, each file once, LPT bound") {
+    import java.nio.file.Files
+    import java.nio.charset.StandardCharsets
+    // 40 files, sizes ∝ 1/rank, about 6 MiB in all; ranks shuffled over
+    // the manifest so size order is not manifest order
+    val dir = Files.createTempDirectory("mc_pack")
+    val line = ("lorem ipsum dolor sit amet " * 3).trim + "\n"
+    val ranks = new scala.util.Random(7).shuffle((1 to 40).toVector)
+    val sizes = (1 to 40).map { id =>
+      val copies = (1500000 / ranks(id - 1)) / line.length + 1
+      val bytes = (line * copies).getBytes(StandardCharsets.UTF_8)
+      Files.write(dir.resolve(s"f$id.txt"), bytes)
+      id -> bytes.length.toLong
+    }.toMap
+    Files.write(dir.resolve("m.txt"),
+      (s"${sizes.size}\n" + (1 to 40).map(id => s"f$id.txt\n").mkString)
+        .getBytes(StandardCharsets.UTF_8))
+    val df = spark.read.format("manifest-corpus").load(dir.resolve("m.txt").toString)
+    val k = df.rdd.getNumPartitions
+    assert(k === math.min(sizes.size, spark.sparkContext.defaultParallelism))
+    // per partition: its file ids in row order, consecutive repeats collapsed
+    val parts = df.select("file_id").rdd.mapPartitions { it =>
+      Iterator(it.map(_.getInt(0)).foldLeft(Vector.empty[Int]) { (acc, id) =>
+        if (acc.lastOption.contains(id)) acc else acc :+ id
+      })
+    }.collect().toSeq
+    assert(parts.flatten.sorted === (1 to 40), "every file_id in exactly one partition")
+    parts.foreach(p => assert(p === p.sorted, s"manifest order within a partition: $p"))
+    val total = sizes.values.sum
+    val heaviest = parts.map(_.map(sizes).sum).max
+    assert(heaviest <= total / k + sizes.values.max,
+      s"heaviest partition $heaviest bytes over the LPT bound (total $total, k $k)")
+  }
+
   test("column pruning reaches the scan") {
     val pruned = spark.read.format("manifest-corpus").load(manifest).select("value")
     val desc = pruned.queryExecution.executedPlan.toString
