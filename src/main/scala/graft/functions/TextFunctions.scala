@@ -16,8 +16,10 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
-  /** Reference word normalization: `tolower` + strip `[^a-z]`. */
-  def normalizeWord(c: Column): Column = regexp_replace(lower(c), "[^a-z]", "")
+  /** Reference word normalization: strip `[^A-Za-z]`, then `tolower`.
+    * Stripping first drops every non-ASCII code point before it could
+    * lower into an ASCII letter (the C-locale `tolower` never maps one). */
+  def normalizeWord(c: Column): Column = lower(regexp_replace(c, "[^A-Za-z]", ""))
 
   /** Whitespace tokenization, mirroring C++ `operator>>` on a stream
     * (`src/main.cc:73`): any run of whitespace separates tokens. */
@@ -133,8 +135,8 @@ object TextFunctions {
   val docwCteSql: String =
     """docw AS MATERIALIZED (
       |  SELECT doc_id, text, lang,
-      |         list_filter(list_transform(regexp_split_to_array(lower(text), '\s+'),
-      |                     x -> regexp_replace(x, '[^a-z]', '', 'g')),
+      |         list_filter(list_transform(regexp_split_to_array(text, '\s+'),
+      |                     x -> lower(regexp_replace(x, '[^A-Za-z]', '', 'g'))),
       |                     x -> x <> '') AS w
       |  FROM documents
       |)""".stripMargin

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.plans.TextNormExprs
 
 /** The reference engine's one end-to-end job (`/root/reference/src/main.cc`):
   * an inverted index over a corpus of text files.
@@ -20,9 +21,15 @@ import graft.functions.TextFunctions
   * Spark mapping: manifest → driver-side (path, id) table (metadata, not
   * data); text scan + whitespace explode (O2); normalize `lower` +
   * strip `[^a-z]` (O3–O4, byte-faithful to `src/main.cc:33-42,75`);
-  * empty-token filter (O5); `distinct` gives the map-side combine and
-  * global dedup in one declarative step (O6–O8, Catalyst splits
-  * partial/final); `groupBy(word).agg(sort_array(collect_set))` is the
+  * empty-token filter (O5). The map-side combine (O6) is per file, like
+  * the reference mapper's one word set per file: the scan emits a
+  * file's lines as one run, and [[graft.plans.TextNormExprs.FirstInRunExpr]]
+  * drops the words already seen in that run before the explode, so the
+  * shuffle's partial aggregate sees each (file, word) pair about once
+  * instead of once per occurrence. `collect_set` then does the global
+  * dedup (O8) in the shuffle's partial/final aggregates, so output never
+  * depends on how complete the combine was;
+  * `groupBy(word).agg(sort_array(collect_set))` is the
   * reduce (O12, sort deferred to projection like `src/main.cc:143`);
   * letter bucketing + per-partition ordered write is the sink (O13).
   * The mutexes/barriers of the reference become shuffle boundaries; its
@@ -69,14 +76,19 @@ object InvertedIndex {
     * (word, letter, ids, cnt, line). `ids` ascending, `cnt` = number of
     * containing files. */
   def buildIndexFrom(corpus: DataFrame): DataFrame =
+    buildIndexFrom(corpus, TextNormExprs.FirstInRunCap)
+
+  /** [[buildIndexFrom]] with the per-file combine's word cap given;
+    * specs lower it to make the combine clear mid-file. */
+  private[graft] def buildIndexFrom(corpus: DataFrame, runCap: Int): DataFrame =
     corpus
-      // tokenize+normalize+empty-filter in ONE native pass per line
-      // (graft.plans.TextNormExprs), then explode — identical rows to
-      // explode(split) → per-token regex strip → filter
-      .select(col("file_id"), explode(TextFunctions.normalizedWords(col("value"))).as("word"))
-      // collect_set dedups (word, file) pairs in its partial aggregate:
-      // the reference's map-side combine (O6) and global dedup (O8) in
-      // one shuffle instead of distinct + regroup
+      // tokenize+normalize+empty-filter in ONE native pass per line,
+      // then keep only the words new to this line's file run (the map-
+      // side combine, O6): an in-file repeat never reaches the explode
+      .select(col("file_id"), explode(TextNormExprs.firstInRun(col("file_id"),
+        TextFunctions.normalizedWords(col("value")), runCap)).as("word"))
+      // collect_set dedups whatever (word, file) repeats got through the
+      // combine: a file split over partitions, or a run's cap clear
       .groupBy("word")
       .agg(sort_array(collect_set(col("file_id"))).as("ids"))
       .select(col("word"), substring(col("word"), 1, 1).as("letter"), col("ids"),
@@ -119,11 +131,14 @@ object InvertedIndex {
     * file where the letter changes: a small index takes a task or two,
     * not 26. The driver only touches missing (empty) letters.
     *
-    * Files are created through the raw filesystem under a checksum
-    * layer ([[graft.sources.ManifestCorpusSource.rawFs]]), so a local
-    * `outDir` holds exactly the 26 files and no `.crc` sidecars. The
-    * pre-write delete goes through the checksummed filesystem, which
-    * also removes the sidecars an older run left behind.
+    * Every letter file, the driver's empty ones included, is created
+    * by [[graft.sources.ManifestCorpusSource.createRaw]]: under any
+    * checksum layer, so a local `outDir` holds exactly the 26 files and
+    * no `.crc` sidecars, and through `java.nio` when the filesystem is
+    * local, since Hadoop's local create forks a `chmod` per file when
+    * the native libhadoop is not loaded. The pre-write delete goes
+    * through the checksummed filesystem, which also removes the
+    * sidecars an older run left behind.
     *
     * CLUSTER-READY: executors write through the Hadoop FileSystem API
     * (the session's conf shipped via [[graft.sources.SerializableHadoopConf]],
@@ -152,15 +167,15 @@ object InvertedIndex {
         // resolve the FS on the executor from the shipped conf — never
         // from a driver-captured FileSystem (not serializable, and the
         // executor may need different credentials/caches)
-        lazy val efs = graft.sources.ManifestCorpusSource.rawFs(
-          new org.apache.hadoop.fs.Path(outDir).getFileSystem(conf.value))
+        lazy val efs = new org.apache.hadoop.fs.Path(outDir).getFileSystem(conf.value)
         it.foreach { r =>
           val letter = r.getString(0)
           if (letter != cur) {
             if (out != null) out.close()
             cur = letter
             out = new PrintWriter(new java.io.OutputStreamWriter(
-              efs.create(new org.apache.hadoop.fs.Path(outDir, s"$letter.txt"), true),
+              graft.sources.ManifestCorpusSource.createRaw(
+                efs, new org.apache.hadoop.fs.Path(outDir, s"$letter.txt")),
               java.nio.charset.StandardCharsets.UTF_8))
           }
           out.println(r.getString(1))
@@ -169,7 +184,7 @@ object InvertedIndex {
       }
     ('a' to 'z').foreach { c =>
       val p = new org.apache.hadoop.fs.Path(outPath, s"$c.txt")
-      if (!fs.exists(p)) graft.sources.ManifestCorpusSource.rawFs(fs).create(p, false).close()
+      if (!fs.exists(p)) graft.sources.ManifestCorpusSource.createRaw(fs, p).close()
     }
   }
 

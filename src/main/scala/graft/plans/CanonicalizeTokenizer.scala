@@ -9,7 +9,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Optimizer rule (Catalyst `Rule[LogicalPlan]`, SURVEY §7.5 route (c)):
   * rewrites the idiomatic composed tokenizer pipeline
   *
-  * {{{ filter(transform(split(text, "\\s+"), t => regexp_replace(lower(t), "[^a-z]", "")), w => w != "") }}}
+  * {{{ filter(transform(split(text, "\\s+"), t => lower(regexp_replace(t, "[^A-Za-z]", ""))), w => w != "") }}}
   *
   * to the native single-pass [[TextNormExprs.NormalizedWordsExpr]]. A
   * user writing the reference normalization with plain built-ins gets
@@ -20,7 +20,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Matching is deliberately exact (that regex, that replacement, that
   * empty-string filter, lambda variables properly bound) — anything
-  * else is left untouched.
+  * else is left untouched. That includes the lower-first spelling
+  * `regexp_replace(lower(t), "[^a-z]", "")`, which is not equivalent:
+  * `lower` maps some non-ASCII code points (U+212A KELVIN SIGN) to
+  * ASCII letters that the strip then keeps.
   */
 object CanonicalizeTokenizer extends Rule[LogicalPlan] {
 
@@ -34,12 +37,12 @@ object CanonicalizeTokenizer extends Rule[LogicalPlan] {
           ArrayTransform(
             StringSplit(text, sep, Literal(-1, IntegerType)),
             LambdaFunction(
-              RegExpReplace(Lower(tv: NamedLambdaVariable), re, rep, Literal(1, IntegerType)),
+              Lower(RegExpReplace(tv: NamedLambdaVariable, re, rep, Literal(1, IntegerType))),
               Seq(tArg: NamedLambdaVariable), _)),
           LambdaFunction(
             Not(EqualTo(fv: NamedLambdaVariable, emptyLit)),
             Seq(fArg: NamedLambdaVariable), _))
-        if isStr(sep, "\\s+") && isStr(re, "[^a-z]") && isStr(rep, "") &&
+        if isStr(sep, "\\s+") && isStr(re, "[^A-Za-z]") && isStr(rep, "") &&
           isStr(emptyLit, "") && tv.exprId == tArg.exprId && fv.exprId == fArg.exprId =>
       TextNormExprs.NormalizedWordsExpr(text)
   }

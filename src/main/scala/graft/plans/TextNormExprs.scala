@@ -1,9 +1,12 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, GraftColumnBridge}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Nondeterministic, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -23,52 +26,38 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Equivalence notes:
   *  - the raw text is split FIRST (Java regex `\s` is exactly
-  *    {0x20, 0x09–0x0D}), then each token is lowercased independently —
-  *    the same order as the composed form. Per-token lowering matters:
-  *    `UTF8String.toLowerCase` takes a locale-independent bytewise path
-  *    only for fully-ASCII input, so a pure-ASCII token must be lowered
-  *    on that path even when the surrounding document contains
-  *    non-ASCII bytes (a whole-document lower would route the ASCII
-  *    token through the locale-sensitive slow path — wrong under e.g. a
-  *    Turkish default locale, where "IS" would lower to dotless-ı "ıs").
-  *  - every non-[a-z] post-lower byte (digits, punctuation, any UTF-8
-  *    lead/continuation byte ≥ 0x80) is dropped *without* ending the
-  *    word — matching `regexp_replace(tok, "[^a-z]", "")`, where
-  *    "don't" → "dont" and "x1y" → "xy".
+  *    {0x20, 0x09–0x0D}), then each token is normalized independently —
+  *    the same order as the composed form.
+  *  - normalization is the reference's C-locale byte walk: every byte
+  *    ≥ 0x80 (any UTF-8 lead or continuation byte) is dropped before
+  *    lowering, so no non-ASCII code point can lower into an ASCII
+  *    letter (U+212A KELVIN SIGN is not `k`, U+0130 `İ` is not `i`).
+  *    The composed form spells this as `lower(regexp_replace(t,
+  *    "[^A-Za-z]", ""))`: strip first, then lower pure ASCII, which
+  *    takes `UTF8String`'s locale-independent path even under e.g. a
+  *    Turkish default locale.
+  *  - every other non-[a-z] post-lower byte (digits, punctuation) is
+  *    dropped *without* ending the word, so "don't" → "dont" and
+  *    "x1y" → "xy".
   */
 object TextNormExprs {
 
   private def isWs(b: Byte): Boolean = b == 0x20 || (b >= 0x09 && b <= 0x0d)
 
   /** Lower + strip one raw token (bytes [from, until)) into buf,
-    * returning the normalized length. ASCII tokens take the manual
-    * bytewise path; tokens with any non-ASCII byte route through the
-    * same `UTF8String.toLowerCase` the composed form's `lower()` uses. */
+    * returning the normalized length: ASCII `A-Z` lowers, `[a-z]` is
+    * kept, and every other byte, any byte ≥ 0x80 included, is dropped. */
   private def normalizeToken(bytes: Array[Byte], from: Int, until: Int,
       buf: Array[Byte]): Int = {
-    var ascii = true
-    var i = from
-    while (ascii && i < until) { if (bytes(i) < 0) ascii = false; i += 1 }
     var w = 0
-    if (ascii) {
-      i = from
-      while (i < until) {
-        var b = bytes(i)
-        if (b >= 'A' && b <= 'Z') b = (b + 32).toByte
-        if (b >= 'a' && b <= 'z') { buf(w) = b; w += 1 }
-        i += 1
-      }
-      w
-    } else {
-      val lowered = UTF8String.fromBytes(bytes, from, until - from).toLowerCase.getBytes
-      i = 0
-      while (i < lowered.length) {
-        val b = lowered(i)
-        if (b >= 'a' && b <= 'z') { buf(w) = b; w += 1 }
-        i += 1
-      }
-      w
+    var i = from
+    while (i < until) {
+      var b = bytes(i)
+      if (b >= 'A' && b <= 'Z') b = (b + 32).toByte
+      if (b >= 'a' && b <= 'z') { buf(w) = b; w += 1 }
+      i += 1
     }
+    w
   }
 
   /** The tokenizer kernel, shared by the interpreted `nullSafeEval` and
@@ -79,10 +68,8 @@ object TextNormExprs {
   def normalizeWordsEval(input: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
     val bytes = input.getBytes
     val out = new java.util.ArrayList[UTF8String]()
-    // lowering can lengthen a token (e.g. İ → i + combining dot); the
-    // kept [a-z] bytes are bounded by the lowered byte length, which
-    // Unicode bounds at 3× the input — size the shared buffer to that
-    val buf = new Array[Byte](math.max(16, bytes.length * 3))
+    // a normalized token is never longer than its raw bytes
+    val buf = new Array[Byte](bytes.length)
     var start = 0
     var i = 0
     while (i <= bytes.length) {
@@ -128,6 +115,81 @@ object TextNormExprs {
 
   def normalizedWords(text: Column): Column =
     GraftColumnBridge.toColumn(NormalizedWordsExpr(GraftColumnBridge.toExpression(text)))
+
+  // ---- per-run map-side combine --------------------------------------
+
+  /** Default bound on the words one run remembers: a few MB of keys per
+    * task, far above the distinct words of a typical corpus file. */
+  val FirstInRunCap: Int = 1 << 16
+
+  /** Map-side combine for a scan that emits each key's rows as one
+    * contiguous run, as the manifest-corpus reader does with a file's
+    * lines: of each row's `words`, keep only those not yet seen in the
+    * current run of rows with the same `key`. The per-task word set is
+    * cleared when the key changes, and also when it reaches `cap`
+    * words, so memory stays bounded on any input.
+    *
+    * The result is NOT a global dedup. A run split across partitions,
+    * a key that comes back later, or a cap clear lets a word through
+    * again, so a consumer must still dedup; the combine only shrinks
+    * what reaches it. `Nondeterministic` and `stateful`: the set lives
+    * per task (created in `initializeInternal`, or in the generated
+    * class's partition initializer), and Catalyst neither duplicates
+    * nor reorders the expression. A null key passes the words through;
+    * null words give null. */
+  case class FirstInRunExpr(key: Expression, words: Expression, cap: Int = FirstInRunCap)
+      extends BinaryExpression with Nondeterministic {
+    require(cap >= 1, s"first_in_run cap=$cap must be >= 1")
+    override def left: Expression = key
+    override def right: Expression = words
+    override def dataType: DataType = words.dataType
+    override def nullable: Boolean = words.nullable
+    override def stateful: Boolean = true
+
+    override def checkInputDataTypes(): TypeCheckResult = (key.dataType, words.dataType) match {
+      case (IntegerType, ArrayType(StringType, false)) => TypeCheckResult.TypeCheckSuccess
+      case (k, w) => TypeCheckResult.TypeCheckFailure(
+        s"first_in_run requires (INT, ARRAY<STRING NOT NULL>), got " +
+          s"(${k.simpleString}, ${w.simpleString})")
+    }
+
+    @transient private[this] var state: FirstInRunSet = _
+
+    override protected def initializeInternal(partitionIndex: Int): Unit =
+      state = new FirstInRunSet(cap)
+
+    override protected def evalInternal(input: InternalRow): Any = {
+      val w = words.eval(input)
+      val k = key.eval(input)
+      if (w == null || k == null) w
+      else state.keepUnseen(k.asInstanceOf[Int], w.asInstanceOf[ArrayData])
+    }
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val cls = classOf[FirstInRunSet].getName
+      val st = ctx.addMutableState(cls, "firstInRun")
+      ctx.addPartitionInitializationStatement(s"$st = new $cls($cap);")
+      val k = key.genCode(ctx)
+      val w = words.genCode(ctx)
+      ev.copy(code = code"""
+        ${k.code}
+        ${w.code}
+        boolean ${ev.isNull} = ${w.isNull};
+        ${CodeGenerator.javaType(dataType)} ${ev.value} = ${w.value};
+        if (!${ev.isNull} && !${k.isNull}) {
+          ${ev.value} = $st.keepUnseen(${k.value}, ${w.value});
+        }""")
+    }
+
+    override protected def withNewChildrenInternal(
+        newLeft: Expression, newRight: Expression): Expression =
+      copy(key = newLeft, words = newRight)
+    override def prettyName: String = "first_in_run"
+  }
+
+  def firstInRun(key: Column, words: Column, cap: Int = FirstInRunCap): Column =
+    GraftColumnBridge.toColumn(FirstInRunExpr(
+      GraftColumnBridge.toExpression(key), GraftColumnBridge.toExpression(words), cap))
 
   // ---- keep-first distinct (order-preserving array dedup) -----------
 
@@ -861,4 +923,31 @@ object TextNormExprs {
   def vocabTokenIds(words: Column, vocab: Seq[String]): Column =
     GraftColumnBridge.toColumn(
       VocabTokenIdsExpr(GraftColumnBridge.toExpression(words), vocab))
+}
+
+/** One task's state for [[TextNormExprs.FirstInRunExpr]]: the key of
+  * the current run and the words already emitted for it. Top-level so
+  * generated Java can name it. */
+final class FirstInRunSet(cap: Int) {
+  private var key = 0
+  private val seen = new java.util.HashSet[UTF8String]()
+
+  /** The words of `words` not yet in the set, in order; they join it. */
+  def keepUnseen(k: Int, words: ArrayData): ArrayData = {
+    if (k != key) { seen.clear(); key = k }
+    val n = words.numElements()
+    val out = new java.util.ArrayList[UTF8String](n)
+    var i = 0
+    while (i < n) {
+      val w = words.getUTF8String(i)
+      if (!seen.contains(w)) {
+        if (seen.size >= cap) seen.clear()
+        // a copy: w may point into a buffer the next row reuses
+        seen.add(w.clone())
+        out.add(w)
+      }
+      i += 1
+    }
+    new GenericArrayData(out.toArray)
+  }
 }

@@ -1,11 +1,14 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, ByteArrayOutputStream, FileNotFoundException, InputStream}
+import java.io.{FileNotFoundException, InputStream, OutputStream}
+import java.nio.file.Files
 import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path => HPath, RawLocalFileSystem}
+import org.apache.hadoop.io.Text
+import org.apache.hadoop.util.LineReader
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -43,7 +46,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *    HDFS/S3 works the same as a local one. For `ChecksumFileSystem`
   *    schemes (plain local files) the reader unwraps to the raw FS —
   *    the corpus has no `.crc` sidecars, and skipping the per-open
-  *    checksum probe keeps the local read path as fast as `java.io`.
+  *    checksum probe keeps the local read path as fast as `java.io`;
+  *  - **text-source lines**: each file is read a buffer at a time by
+  *    Hadoop's `LineReader`, the `\n` / `\r\n` / lone-`\r` terminators
+  *    of `spark.read.textFile`, and a line's bytes are copied once into
+  *    its `value`, invalid UTF-8 included. A file's lines come out as
+  *    one contiguous run of its partition, which the inverted index's
+  *    per-file combine relies on for its savings (not its output).
   *
   * This replaces the driver-side manifest read + scan-path decode +
   * broadcast join of the original formulation: file ids are stamped by
@@ -74,7 +83,7 @@ object ManifestCorpusSource {
   /** The filesystem under the checksum layer of local-style schemes
     * (`ChecksumFileSystem`), or `fs` itself for every other scheme
     * (HDFS, object stores), which keeps no `.crc` sidecars. */
-  private[graft] def rawFs(fs: FileSystem): FileSystem = fs match {
+  private def rawFs(fs: FileSystem): FileSystem = fs match {
     case cfs: ChecksumFileSystem => cfs.getRawFileSystem
     case other => other
   }
@@ -84,6 +93,22 @@ object ManifestCorpusSource {
     * `ChecksumFileSystem.open` pays an extra existence probe per file
     * to discover that. */
   private[sources] def openRaw(fs: FileSystem, p: HPath): InputStream = rawFs(fs).open(p)
+
+  /** Create or truncate `p` for write, bypassing the checksum layer like
+    * [[openRaw]]. A local file is created through `java.nio`: without
+    * the native libhadoop, `RawLocalFileSystem.create` sets each new
+    * file's permission by forking `chmod`, which costs milliseconds a
+    * file. Every other filesystem gets `FileSystem.create(p, true)`. */
+  private[graft] def createRaw(fs: FileSystem, p: HPath): OutputStream = rawFs(fs) match {
+    case local: RawLocalFileSystem =>
+      val f = local.pathToFile(p).toPath
+      Files.createDirectories(f.getParent)
+      Files.newOutputStream(f)
+    case other => other.create(p, true)
+  }
+
+  /** Read buffer of the corpus line reader. */
+  private[graft] val LineBufferBytes = 64 << 10
 
   /** Below this many bytes per bin a split is not worth a task. */
   private val MinBinBytes = 1L << 20
@@ -341,25 +366,16 @@ class ManifestCorpusReaderFactory(required: StructType,
       private val fields: Array[Int] =
         required.fieldNames.map(ManifestCorpusSource.Schema.fieldIndex)
       private val fileIter = files.iterator
-      private var in: BufferedInputStream = _
+      // Hadoop's LineReader fills a 64 KiB buffer per read and splits
+      // on \n, \r\n or a lone \r, exactly like the LineRecordReader
+      // behind spark.read.textFile. Line bytes reach the UTF8String
+      // untouched: a String round-trip would replace invalid UTF-8 with
+      // U+FFFD and break byte parity with the text source.
+      private var in: LineReader = _
+      private val text = new Text()
       private var curPath: UTF8String = _
       private var curId: Int = _
       private var line: Array[Byte] = _
-
-      /** Raw byte line (terminator \n, \r\n or lone \r, like Hadoop's
-        * LineRecordReader), or null at EOF. Bytes pass through to the
-        * UTF8String untouched — a String round-trip would replace
-        * invalid UTF-8 with U+FFFD, breaking byte parity with
-        * spark.read.textFile (and charset-independence: the JVM default
-        * here is US-ASCII under a POSIX locale). */
-      private def readLineBytes(): Array[Byte] = {
-        var b = in.read()
-        if (b == -1) return null
-        val buf = new ByteArrayOutputStream(128)
-        while (b != -1 && b != '\n' && b != '\r') { buf.write(b); b = in.read() }
-        if (b == '\r') { in.mark(1); if (in.read() != '\n') in.reset() }
-        buf.toByteArray
-      }
 
       private var emitted = 0L
 
@@ -369,15 +385,19 @@ class ManifestCorpusReaderFactory(required: StructType,
         if (pushedLimit.exists(emitted >= _)) { close(); return false }
         while (true) {
           if (in != null) {
-            line = readLineBytes()
-            if (line != null) { emitted += 1; return true }
+            if (in.readLine(text) > 0) {
+              line = java.util.Arrays.copyOf(text.getBytes, text.getLength)
+              emitted += 1
+              return true
+            }
             in.close(); in = null
           }
           if (!fileIter.hasNext) return false
           val (p, id) = fileIter.next()
           val hPath = new HPath(p)
           val fs = hPath.getFileSystem(confCarrier.value)
-          in = new BufferedInputStream(ManifestCorpusSource.openRaw(fs, hPath))
+          in = new LineReader(ManifestCorpusSource.openRaw(fs, hPath),
+            ManifestCorpusSource.LineBufferBytes)
           curPath = UTF8String.fromString(p)
           curId = id
         }

@@ -42,6 +42,13 @@ class CanonicalizeTokenizerSpec extends SparkSuite {
         w => w =!= "").as("w"))
       val optimized = other.queryExecution.optimizedPlan.toString
       assert(!optimized.contains("normalized_words"), optimized)
+      // lower-first spelling — Unicode lowering can map a non-ASCII code
+      // point into [a-z] before the strip, so it is not the tokenizer
+      val lowerFirst = docs.select(filter(
+        transform(split(col("text"), "\\s+"), t => regexp_replace(lower(t), "[^a-z]", "")),
+        w => w =!= "").as("w"))
+      val lowerFirstPlan = lowerFirst.queryExecution.optimizedPlan.toString
+      assert(!lowerFirstPlan.contains("normalized_words"), lowerFirstPlan)
     } finally spark.experimental.extraOptimizations = prev
   }
 }

@@ -168,13 +168,19 @@ class EdgeCasesSpec extends SparkSuite {
   test("rerunning into the same outDir clears stale letter files") {
     import java.nio.file.{Files, Paths}
     val out = Files.createTempDirectory("stale").toString
-    Files.writeString(Paths.get(s"$out/b.txt"), "bogus:[9]\n") // stale prior content
+    val goldenB = Files.readAllBytes(CorpusSmall.golden.resolve("b.txt"))
+    // stale prior content: a b.txt longer than the fresh one (left in
+    // place, its tail would survive a create that does not truncate), a
+    // non-empty d.txt for a letter this corpus lacks, a checksum sidecar
+    Files.writeString(Paths.get(s"$out/b.txt"), "bogus:[9]\n" * (goldenB.length / 10 + 2))
+    Files.writeString(Paths.get(s"$out/d.txt"), "dusty:[1]\n")
+    Files.write(Paths.get(s"$out/.b.txt.crc"), Array[Byte](1, 2, 3, 4))
     graft.operators.InvertedIndex.run(spark, CorpusSmall.manifest, out)
     // small corpus HAS b-words, so b.txt must now hold only fresh lines
-    val b = Files.readAllLines(Paths.get(s"$out/b.txt"))
-    assert(!b.contains("bogus:[9]") && b.size > 0)
+    assert(Files.readAllBytes(Paths.get(s"$out/b.txt")) sameElements goldenB)
     // and the known-empty letter is a fresh 0-byte file
     assert(Files.size(Paths.get(s"$out/d.txt")) === 0)
+    assert(!new java.io.File(out).list().exists(_.endsWith(".crc")))
   }
 
   test("inverted index on a corpus where a letter is empty still writes 26 files") {

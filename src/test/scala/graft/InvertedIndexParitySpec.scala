@@ -3,7 +3,11 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.functions.{col, explode}
+
+import graft.functions.TextFunctions
 import graft.operators.InvertedIndex
+import graft.plans.TextNormExprs
 
 /** Golden parity for the small-corpus gate the reference's checker.sh
   * grades with `diff -w` over all 26 letter files. Each golden test
@@ -59,6 +63,63 @@ class InvertedIndexParitySpec extends SparkSuite {
     }
   }
 
+  private def assertGoldenBytes(out: Path, what: String): Unit =
+    ('a' to 'z').foreach { c =>
+      assert(Files.readAllBytes(out.resolve(s"$c.txt")) sameElements
+        Files.readAllBytes(CorpusSmall.golden.resolve(s"$c.txt")),
+        s"letter $c differs from golden ${CorpusSmall.golden} $what")
+    }
+
+  private def fixtureCorpus = spark.read.format("manifest-corpus")
+    .load(CorpusSmall.manifest).select("file_id", "value")
+
+  /** The map side of the index: each line's words, minus those already
+    * seen in its file's run. */
+  private def combined(corpus: org.apache.spark.sql.DataFrame) = corpus.select(col("file_id"),
+    explode(TextNormExprs.firstInRun(col("file_id"),
+      TextFunctions.normalizedWords(col("value")))).as("word"))
+
+  test("index equals the golden when files are split over partitions (round-robin)") {
+    // the combine sees a file as several runs, so in-file repeats reach
+    // collect_set, which must still remove them
+    val out = Files.createTempDirectory("idx_rr")
+    InvertedIndex.writeLetterFiles(
+      InvertedIndex.buildIndexFrom(fixtureCorpus.repartition(3)), out.toString)
+    assertGoldenBytes(out, "after repartition(3)")
+  }
+
+  test("index equals the golden with the combine's word cap at 2") {
+    val out = Files.createTempDirectory("idx_cap")
+    InvertedIndex.writeLetterFiles(InvertedIndex.buildIndexFrom(fixtureCorpus, 2), out.toString)
+    assertGoldenBytes(out, "with the combine capped at 2 words")
+  }
+
+  test("the per-file combine emits each distinct (file_id, word) pair exactly once") {
+    val tokens = fixtureCorpus.select(col("file_id"),
+      explode(TextFunctions.normalizedWords(col("value"))).as("word"))
+    val pairs = combined(fixtureCorpus).collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+    assert(pairs.distinct.size === pairs.size, "a pair came out twice")
+    assert(pairs.toSet === tokens.distinct().collect().map(r => (r.getInt(0), r.getString(1))).toSet)
+    assert(tokens.count() > pairs.size, "the fixture has in-file repeats to combine")
+  }
+
+  test("the combine's state is per task: executing one DataFrame twice gives the same rows") {
+    val key = "spark.sql.codegen.wholeStage"
+    val before = spark.conf.getOption(key)
+    try Seq("true", "false").foreach { codegen =>
+      spark.conf.set(key, codegen)
+      // one file, so a set left over from the first execution would hold
+      // the second one's key and drop all its words
+      val df = combined(fixtureCorpus.filter(col("file_id") === 1))
+      val first = df.collect().toSeq
+      assert(first.nonEmpty)
+      assert(df.collect().toSeq === first, s"second execution differs (wholeStage=$codegen)")
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("letter sink output is byte-equal to the golden at 1 and 64 shuffle partitions") {
     // the sink inherits the session's shuffle partition count: every
     // letter in one task, or letters spread thin over mostly empty ones
@@ -70,11 +131,7 @@ class InvertedIndexParitySpec extends SparkSuite {
         spark.conf.set("spark.sql.shuffle.partitions", n.toLong)
         val out = Files.createTempDirectory(s"idx_p$n")
         InvertedIndex.run(spark, CorpusSmall.manifest, out.toString)
-        ('a' to 'z').foreach { c =>
-          assert(Files.readAllBytes(out.resolve(s"$c.txt")) sameElements
-            Files.readAllBytes(CorpusSmall.golden.resolve(s"$c.txt")),
-            s"letter $c differs from golden ${CorpusSmall.golden} at $n shuffle partitions")
-        }
+        assertGoldenBytes(out, s"at $n shuffle partitions")
       }
     } finally before.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)

@@ -67,6 +67,43 @@ class ManifestCorpusSourceSpec extends SparkSuite {
       s"heaviest partition $heaviest bytes over the LPT bound (total $total, k $k)")
   }
 
+  test("line terminators, blank and long lines, invalid UTF-8: rows equal spark.read.textFile") {
+    import java.nio.file.Files
+    import java.nio.charset.StandardCharsets.US_ASCII
+    val buf = graft.sources.ManifestCorpusSource.LineBufferBytes
+    val dir = Files.createTempDirectory("mc_lines")
+    val bodies: Seq[Array[Byte]] = Seq(
+      "crlf one\r\ncrlf two\r\n",
+      "lone cr\rnext\r\rafter a blank\n",
+      // the CR is the first buffer's last byte, its LF the next buffer's first
+      "x" * (buf - 1) + "\r\nstraddled\rtail\n",
+      "\n\nblank lines\n\n\nno final newline",
+      "",
+      "y" * (3 * buf + 17) + "\nshort\n"
+    ).map(_.getBytes(US_ASCII)) :+
+      Array[Byte]('o', 'k', ' ', 0xff.toByte, 0xc3.toByte, '\n', 0x80.toByte, 'z', '\r', '\n')
+    bodies.zipWithIndex.foreach { case (b, i) => Files.write(dir.resolve(s"f$i.txt"), b) }
+    Files.write(dir.resolve("m.txt"),
+      (s"${bodies.size}\n" + bodies.indices.map(i => s"f$i.txt\n").mkString).getBytes(US_ASCII))
+    def bytesOf(df: org.apache.spark.sql.DataFrame): Seq[Seq[Byte]] =
+      df.select(col("value").cast("binary")).collect().map(_.getAs[Array[Byte]](0).toSeq).toSeq
+    val v2 = spark.read.format("manifest-corpus").load(dir.resolve("m.txt").toString)
+      .select("file_id", "value")
+    bodies.indices.foreach { i =>
+      val ours = bytesOf(v2.filter(col("file_id") === i + 1))
+      val text = bytesOf(spark.read.text(dir.resolve(s"f$i.txt").toString))
+      assert(ours === text, s"f$i.txt: manifest-corpus lines differ from spark.read.textFile")
+    }
+    assert(bytesOf(v2.filter(col("file_id") === 2)).map(_.length) ===
+      Seq(7, 4, 0, 13), "lone CRs end lines, two in a row make a blank line")
+    assert(bytesOf(v2.filter(col("file_id") === 3)).map(_.length) ===
+      Seq(buf - 1, 9, 4), "a CR/LF pair across the buffer boundary is one terminator")
+    assert(bytesOf(v2.filter(col("file_id") === 5)).isEmpty, "a 0-byte file has no lines")
+    assert(bytesOf(v2.filter(col("file_id") === 7)) ===
+      Seq(Seq[Byte]('o', 'k', ' ', 0xff.toByte, 0xc3.toByte), Seq[Byte](0x80.toByte, 'z')),
+      "invalid UTF-8 bytes pass through unchanged")
+  }
+
   test("column pruning reaches the scan") {
     val pruned = spark.read.format("manifest-corpus").load(manifest).select("value")
     val desc = pruned.queryExecution.executedPlan.toString

@@ -70,6 +70,17 @@ object NormalizerPropertySpec extends Properties("normalizer") {
       } finally java.util.Locale.setDefault(prev)
     }
 
+  property("non-ASCII code points are dropped, never lowered into [a-z]") =
+    org.scalacheck.Prop.secure {
+      import spark.implicits._
+      // U+212A KELVIN SIGN lowers to `k` and U+0130 to `i` + U+0307 under
+      // Unicode rules; the C-locale byte walk drops both instead
+      val raw = Seq("\u212Aey", "\u0130stanbul")
+      val native = raw.toDF("s").select(TextFunctions.normalizedWords(col("s")))
+        .as[Seq[String]].collect().toSeq
+      normalize(raw) == Seq("ey", "stanbul") && native == Seq(Seq("ey"), Seq("stanbul"))
+    }
+
   // ---- UNICODE mode (NFKC + \p{L}) ----------------------------------
 
   property("unicode mode: native == composed reference formulation") =
