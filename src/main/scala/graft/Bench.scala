@@ -135,22 +135,22 @@ object Bench {
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
     // previous committed record (BENCH_LAST.json by default) — used by
     // both the headline and the full-sweep adjudication below
-    def readPrevMap(key: String): Map[String, Double] =
+    val prevRecord: Option[com.fasterxml.jackson.databind.JsonNode] =
       try {
         val p = java.nio.file.Paths.get(
           sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", "BENCH_LAST.json"))
-        if (!java.nio.file.Files.isReadable(p)) Map.empty
-        else {
-          val node = new com.fasterxml.jackson.databind.ObjectMapper()
-            .readTree(java.nio.file.Files.readString(p)).path(key)
-          if (!node.isObject) Map.empty
-          else {
-            val b = Map.newBuilder[String, Double]
-            node.fields().forEachRemaining(e => b += e.getKey -> e.getValue.asDouble(-1.0))
-            b.result()
-          }
-        }
-      } catch { case _: Throwable => Map.empty }
+        if (!java.nio.file.Files.isReadable(p)) None
+        else Some(new com.fasterxml.jackson.databind.ObjectMapper()
+          .readTree(java.nio.file.Files.readString(p)))
+      } catch { case _: Throwable => None }
+    def readPrevMap(key: String): Map[String, Double] =
+      prevRecord.map(_.path(key)).filter(_.isObject).fold(Map.empty[String, Double]) { node =>
+        val b = Map.newBuilder[String, Double]
+        node.fields().forEachRemaining(e => b += e.getKey -> e.getValue.asDouble(-1.0))
+        b.result()
+      }
+    def prevField(key: String): Option[String] =
+      prevRecord.flatMap(r => Option(r.path(key).asText(null)))
     // SCALE-FACTOR GUARD (r13 verdict: the round-13 "clean cut" ran at
     // sf0.001 against sf0.1 history and was narrated as a 27% win — 100×
     // less data, not a speedup). A comparison record whose `sf` differs
@@ -159,21 +159,24 @@ object Bench {
     // garbage, so the prev maps are dropped entirely and the mismatch is
     // stamped into this record's JSON — a record can never again claim
     // faster/slower against a different scale.
-    val prevSf: Option[String] =
-      try {
-        val p = java.nio.file.Paths.get(
-          sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", "BENCH_LAST.json"))
-        if (!java.nio.file.Files.isReadable(p)) None
-        else Option(new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(java.nio.file.Files.readString(p)).path("sf").asText(null))
-      } catch { case _: Throwable => None }
+    val prevSf = prevField("sf")
     val prevSfMismatch = prevSf.exists(_ != sfDir)
     if (prevSfMismatch)
       System.err.println(s"[bench] REFUSING cross-sf comparison: prev record is " +
         s"sf=${prevSf.get}, this run is sf=$sfDir — no adjudication ratios " +
         "will be computed; re-run against a matching-sf baseline")
+    // CORE-COUNT GUARD: the same refusal for a record cut at another
+    // SPARK_GRAFT_CPUS. Every record stamps `cores`; a previous record
+    // without the stamp is of unknown core count and is refused too.
+    val prevCores = prevField("cores")
+    val prevCoresMismatch = prevRecord.isDefined && !prevCores.contains(cpus)
+    if (prevCoresMismatch)
+      System.err.println(s"[bench] REFUSING cross-core comparison: prev record is " +
+        s"cores=${prevCores.getOrElse("unstamped")}, this run is cores=$cpus — no " +
+        "adjudication ratios will be computed; re-run against a matching-core baseline")
+    val prevMismatch = prevSfMismatch || prevCoresMismatch
     val prevHeadline =
-      if (prevSfMismatch) Map.empty[String, Double] else readPrevMap("queries")
+      if (prevMismatch) Map.empty[String, Double] else readPrevMap("queries")
     // ADJUDICATION TRIGGER (round 12, verdict task 4): the r11 record
     // carried four full-sweep entries at 1.40–1.47× prev that the old 2×
     // trigger never re-measured, so the record could not say whether they
@@ -231,7 +234,7 @@ object Bench {
     // the record's `regressed` list — a real regression (or a real
     // plan/work change) by construction, named in the record itself.
     val prevFull: Map[String, Double] =
-      if (prevSfMismatch) Map.empty else readPrevMap("full")
+      if (prevMismatch) Map.empty else readPrevMap("full")
     val headlineMins = results.toMap
     // (name, best sample, Some((first, resample)) when adjudicated)
     val fullResults: Seq[(String, Double, Option[(Double, Double)])] =
@@ -325,7 +328,7 @@ object Bench {
     }).distinct.sorted
     val regressedJson = regressed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val contended = contendedStart || nAdjudications >= 4
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","q27_pairs":$q27Pairs,"reps":$reps,"median":$medians,"spread":$spreads$fullJson$adjJson$headAdjJson,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"load_wait_sec":${f"$loadWaitSec%.1f"},"adjudications":$nAdjudications,"outliers_135":$outliers135,"regressed":$regressedJson,"prev_sf_mismatch":$prevSfMismatch,"contended":$contended}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","cores":"$cpus","q27_pairs":$q27Pairs,"reps":$reps,"median":$medians,"spread":$spreads$fullJson$adjJson$headAdjJson,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"load_wait_sec":${f"$loadWaitSec%.1f"},"adjudications":$nAdjudications,"outliers_135":$outliers135,"regressed":$regressedJson,"prev_sf_mismatch":$prevSfMismatch,"prev_cores_mismatch":$prevCoresMismatch,"contended":$contended}"""
     // The FULL record (medians, spreads, the 60+-entry full-inventory map)
     // is several KB — longer than the driver's stdout tail window, which is
     // why BENCH_r04/r05 recorded `parsed: null`. So: the full record goes to
@@ -334,7 +337,7 @@ object Bench {
     // always survive the tail capture whole.
     val compactQs = results.map { case (k, t) => f""""$k":${t.min}%.3f""" }
       .mkString("{", ",", "}")
-    val compact = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$compactQs,"sf":"$sfDir","q27_pairs":$q27Pairs,"reps":$reps,"adjudicated":$nAdjudications,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"contended":$contended,"full":"BENCH_LAST.json"}"""
+    val compact = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$compactQs,"sf":"$sfDir","cores":"$cpus","q27_pairs":$q27Pairs,"reps":$reps,"adjudicated":$nAdjudications,"loadavg_start":$loadStart,"loadavg_end":$loadEnd,"contended":$contended,"full":"BENCH_LAST.json"}"""
     System.err.println(json)
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LAST.json"),
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))

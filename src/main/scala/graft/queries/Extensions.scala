@@ -5447,13 +5447,13 @@ object Extensions {
     """WITH d AS (
       |  SELECT doc_id,
       |         CAST(len(list_filter(list_transform(
-      |           regexp_split_to_array(lower(text), '\s+'),
-      |           x -> regexp_replace(x, '[^a-z]', '', 'g')),
+      |           regexp_split_to_array(text, '\s+'),
+      |           x -> lower(regexp_replace(x, '[^A-Za-z]', '', 'g'))),
       |           x -> x <> '')) AS BIGINT) AS n_tok
       |  FROM documents
       |  WHERE len(list_filter(list_transform(
-      |          regexp_split_to_array(lower(text), '\s+'),
-      |          x -> regexp_replace(x, '[^a-z]', '', 'g')),
+      |          regexp_split_to_array(text, '\s+'),
+      |          x -> lower(regexp_replace(x, '[^A-Za-z]', '', 'g'))),
       |          x -> x <> '')) >= 1
       |), b AS (
       |  SELECT doc_id, n_tok, CAST(n_tok // 64 AS BIGINT) AS bucket,
@@ -6798,8 +6798,8 @@ object Extensions {
        |), wm AS (
        |  SELECT doc_id, lang, main_text,
        |         CAST(length(main_text) AS BIGINT) AS main_len,
-       |         list_filter(list_transform(regexp_split_to_array(lower(main_text), '\\s+'),
-       |                     x -> regexp_replace(x, '[^a-z]', '', 'g')),
+       |         list_filter(list_transform(regexp_split_to_array(main_text, '\\s+'),
+       |                     x -> lower(regexp_replace(x, '[^A-Za-z]', '', 'g'))),
        |                     x -> x <> '') AS mw
        |  FROM m
        |), bg AS (
@@ -7471,8 +7471,8 @@ object Extensions {
        |)
        |SELECT doc_id,
        |       CAST(strlen(text) AS BIGINT) AS n_chars,
-       |       CAST(len(list_filter(list_transform(regexp_split_to_array(lower(text), '\\s+'),
-       |            x -> regexp_replace(x, '[^a-z]', '', 'g')), x -> x <> '')) AS BIGINT) AS n_tok,
+       |       CAST(len(list_filter(list_transform(regexp_split_to_array(text, '\\s+'),
+       |            x -> lower(regexp_replace(x, '[^A-Za-z]', '', 'g'))), x -> x <> '')) AS BIGINT) AS n_tok,
        |       CASE WHEN doc_id >= 1000000 THEN 'recomputed'
        |            WHEN bkt < 9831 THEN 'recomputed'
        |            ELSE 'carried' END AS src

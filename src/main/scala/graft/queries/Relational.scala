@@ -45,7 +45,7 @@ object Relational {
     """WITH toks AS (
       |  SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS tok FROM documents
       |), words AS (
-      |  SELECT DISTINCT doc_id, regexp_replace(lower(tok), '[^a-z]', '', 'g') AS word FROM toks
+      |  SELECT DISTINCT doc_id, lower(regexp_replace(tok, '[^A-Za-z]', '', 'g')) AS word FROM toks
       |), idx AS (
       |  SELECT word, list_sort(list(doc_id)) AS ids, count(*) AS cnt
       |  FROM words WHERE length(word) > 0 GROUP BY word
@@ -486,7 +486,7 @@ object Relational {
     """WITH toks AS (
       |  SELECT doc_id, unnest(regexp_split_to_array(text, '\s+')) AS tok FROM documents
       |), words AS (
-      |  SELECT DISTINCT doc_id, regexp_replace(lower(tok), '[^a-z]', '', 'g') AS word FROM toks
+      |  SELECT DISTINCT doc_id, lower(regexp_replace(tok, '[^A-Za-z]', '', 'g')) AS word FROM toks
       |), idx AS (
       |  SELECT word, list_sort(list(doc_id)) AS ids
       |  FROM words WHERE length(word) > 0 GROUP BY word

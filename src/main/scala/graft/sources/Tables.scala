@@ -1,6 +1,10 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table catalog over the driver testdata layout (TESTDATA.md):
   * a TPC-H-ish star schema (`region nation customer supplier part orders
@@ -12,6 +16,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `spark.read.parquet` so partition discovery, predicate pushdown and
   * column pruning work unchanged at 100 TB. Never collect these to the
   * driver; every downstream operator keeps them distributed.
+  *
+  * Schema cache: Spark's parquet schema inference runs a one-task job per
+  * `spark.read.parquet` call, so building a query that reads five tables
+  * would launch five jobs before any of its own work. Each read therefore
+  * goes through a per-session cache that holds, per table path, the
+  * inferred `StructType`, the leaf-file fingerprint it was inferred from
+  * (path, length and modification time of every file) and the session's
+  * SQL confs at the time (`sessionState.conf.getAllConfs`). A cached entry
+  * serves a read only under identical confs (so flipping
+  * `binaryAsString`, `nanosAsLong`, case sensitivity or any other conf
+  * re-infers); the read passes the schema (`spark.read.schema(s)`), and
+  * the relation's own file listing is compared with the fingerprint, so a
+  * hit adds no second listing. Any difference — a rewritten table, an
+  * added or removed part file, a non-listing file index — falls back to a
+  * plain `spark.read.parquet` and replaces the entry. There is one entry
+  * per path, and the per-session maps are weakly keyed by the session, so
+  * the cache lives and dies with it.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -37,6 +58,44 @@ object Tables {
     if (!spark.sessionState.conf.contains(key)) spark.conf.set(key, "true")
   }
 
+  private final case class Resolved(
+      confs: Map[String, String], schema: StructType, files: Set[(String, Long, Long)])
+
+  private val resolved =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Resolved]]()
+
+  private def sessionCache(spark: SparkSession): ConcurrentHashMap[String, Resolved] =
+    resolved.synchronized(resolved.computeIfAbsent(spark, _ => new ConcurrentHashMap()))
+
+  /** The (path, length, modification time) of every leaf file in `df`'s
+    * file index, as that index already listed them; None when `df` is not
+    * a scan over a listing file index. */
+  private def leafFiles(df: DataFrame): Option[Set[(String, Long, Long)]] =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location }
+      .collect { case idx: PartitioningAwareFileIndex =>
+        idx.allFiles().iterator
+          .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
+      }
+
+  /** `spark.read.parquet(path)`, with the schema inferred once per
+    * session, path and conf state (see the object's doc). */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val confs = spark.sessionState.conf.getAllConfs
+    val cache = sessionCache(spark)
+    Option(cache.get(path)).filter(_.confs == confs).flatMap { hit =>
+      val df = spark.read.schema(hit.schema).parquet(path)
+      leafFiles(df).filter(_ == hit.files).map(_ => df)
+    }.getOrElse {
+      val df = spark.read.parquet(path)
+      leafFiles(df) match {
+        case Some(files) => cache.put(path, Resolved(confs, df.schema, files))
+        case None => cache.remove(path)
+      }
+      df
+    }
+  }
+
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
       // Normalize ts to TimestampType (microsecond precision) whatever
@@ -51,7 +110,7 @@ object Tables {
       // (pure microseconds), and adding it to timestamp_micros(0)
       // (the epoch instant) is a pure microsecond add.
       ensureNanosAsLong(spark)
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
+      val raw = readParquet(spark, s"$dir/$name.parquet")
       import org.apache.spark.sql.types.{LongType, TimestampNTZType}
       raw.schema("ts").dataType match {
         case LongType =>
@@ -63,7 +122,7 @@ object Tables {
               "timestamp_micros(0) + (ts - TIMESTAMP_NTZ'1970-01-01 00:00:00')"))
         case _ => raw
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else readParquet(spark, s"$dir/$name.parquet")
 
   /** Register every table as a temp view (for spark.sql entry points). */
   def registerAll(spark: SparkSession, dir: String): Unit =
