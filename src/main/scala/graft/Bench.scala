@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.InvertedIndex
 
 /** Driver-run benchmark: times the headline queries at the given scale
-  * factor on a local[32] session and prints ONE JSON line
+  * factor on a [[Session.local]] session and prints ONE JSON line
   * `{"metric":…,"value":…,"unit":"sec","queries":{…},"sf":…}`.
   *
   * Headline set = the reference's own query (q01) + the relational
@@ -26,31 +24,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // r15 OPTIMIZATION (guide §3.1/§9): let the planner pick shuffled-hash
-      // over sort-merge when its size conditions hold, and let AQE rewrite a
-      // planned SMJ to SHJ when every post-shuffle partition is under 64 MiB.
-      // Both knobs are SIZE-GATED by Spark itself — a big-big join at 100 TB
-      // still plans/keeps sort-merge (the build side must fit a per-partition
-      // hash map), so this is not a local[32] tune; it removes the per-round
-      // sort cost of the iterative graph/dedup operators (measured A/B, same
-      // list, same box: q139 8.63→4.25 s, q63b 4.37→3.96 s, q93 3.41→2.99 s,
-      // q66 3.43→3.10 s fresh-JVM min-of-3 at sf0.1; no query regressed
-      // outside position noise — OPTIMIZATION_r15.md). Env-overridable so an
-      // A/B against the old planner choice stays one variable away.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "67108864"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
 
     // Steady-state methodology: one untimed warmup execution (JIT/
     // codegen/file-listing costs a long-running cluster never sees
@@ -169,7 +144,7 @@ object Bench {
     // SPARK_GRAFT_CPUS. Every record stamps `cores`; a previous record
     // without the stamp is of unknown core count and is refused too.
     val prevCores = prevField("cores")
-    val prevCoresMismatch = prevRecord.isDefined && !prevCores.contains(cpus)
+    val prevCoresMismatch = prevRecord.isDefined && !prevCores.contains(cpus.toString)
     if (prevCoresMismatch)
       System.err.println(s"[bench] REFUSING cross-core comparison: prev record is " +
         s"cores=${prevCores.getOrElse("unstamped")}, this run is cores=$cpus — no " +

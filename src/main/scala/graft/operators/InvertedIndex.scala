@@ -42,8 +42,7 @@ object InvertedIndex {
     * file ID. Driver-side read — the manifest is metadata. Reads
     * through the Hadoop FileSystem API (explicit UTF-8), so a manifest
     * on HDFS/S3 works the same as a local one; scheme-less local paths
-    * keep their `java.io` canonical form, which the legacy text-source
-    * formulation's scan-path join relies on. */
+    * keep their `java.io` canonical form. */
   def readManifest(manifestPath: String,
       conf: org.apache.hadoop.conf.Configuration = InvertedIndex.activeHadoopConf()): Seq[(String, Int)] = {
     val mPath = new org.apache.hadoop.fs.Path(manifestPath)
@@ -102,22 +101,6 @@ object InvertedIndex {
   def buildIndexFromManifest(spark: SparkSession, manifestPath: String): DataFrame =
     buildIndexFrom(spark.read.format("manifest-corpus").load(manifestPath)
       .select("file_id", "value"))
-
-  /** Index build from an explicit (path, 1-based id) list — the
-    * built-in-text-source formulation. Normalizes scan-side file
-    * identity (a file:/// URI, percent-encoded) back to the plain path:
-    * strip the scheme, protect literal '+' (url_decode is
-    * form-decoding), then decode %XX escapes so e.g. "my docs/a.txt"
-    * round-trips (spec-covered). */
-  def buildIndex(spark: SparkSession, files: Seq[(String, Int)]): DataFrame = {
-    val manifest = spark.createDataFrame(files).toDF("path", "file_id")
-    val scanned = spark.read.textFile(files.map(_._1): _*)
-      .select(col("value"),
-        url_decode(regexp_replace(
-          regexp_replace(col("_metadata.file_path"), "^file:/+", "/"),
-          "\\+", "%2B")).as("path"))
-    buildIndexFrom(scanned.join(broadcast(manifest), "path"))
-  }
 
   /** Reference-exact sink: one `<letter>.txt` per letter a–z under
     * `outDir`, lines ordered (cnt DESC, word ASC), empty letters as
@@ -195,8 +178,9 @@ object InvertedIndex {
 }
 
 /** CLI parity runner: `graft.operators.InvertedIndexJob <manifest> <outDir>`
-  * — the Spark twin of the reference's `./tema1 M R <manifest>` (thread
-  * counts are the session's business, not the job's). */
+  * — the Spark twin of the reference's `./tema1 M R <manifest>`. Its one
+  * thread count is the session's: `SPARK_GRAFT_CPUS` task slots, which
+  * serve as both the reference's mappers and its reducers. */
 object InvertedIndexJob {
   def main(args: Array[String]): Unit = {
     if (args.length < 2) {
@@ -205,13 +189,7 @@ object InvertedIndexJob {
       sys.exit(1)
     }
     val Array(manifest, outDir) = args.take(2)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("inverted-index")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus)
     try InvertedIndex.run(spark, manifest, outDir)
     finally spark.stop()
   }

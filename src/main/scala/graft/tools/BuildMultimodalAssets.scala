@@ -7,22 +7,14 @@
 // execution — but pre-building keeps even the first bench sample clean.
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.Session
 import graft.operators.Multimodal
 import graft.sources.Tables
 
 object BuildMultimodalAssets {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: BuildMultimodalAssets <sfDir> [<sfDir2> ...]")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("build-multimodal-assets")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     args.foreach { dir =>
       val n = Multimodal.cachedCorpusAssets(
         Tables(spark, dir, "documents"), "doc_id", "text").count()

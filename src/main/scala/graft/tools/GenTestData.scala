@@ -28,8 +28,10 @@
 //    shape Tables normalizes (`timestamp_micros(ts div 1000)`).
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.Session
 
 object GenTestData {
   def main(args: Array[String]): Unit = {
@@ -37,14 +39,7 @@ object GenTestData {
     val sf = args.lift(1).map(_.toDouble).getOrElse(1.0)
     val mode = args.lift(2).getOrElse("dense")
     require(mode == "dense" || mode == "zipf", s"unknown mode '$mode' (dense|zipf)")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName(s"gen-testdata-sf$sf")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     import spark.implicits._
 
     def n(base: Long): Long = math.max(1L, (base * sf).toLong)

@@ -21,6 +21,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Session
 import graft.functions.VectorFunctions
 import graft.operators.Similarity
 import graft.sources.Tables
@@ -28,16 +29,7 @@ import graft.sources.Tables
 object SemanticDedupBench {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: SemanticDedupBench <sfDir|synthetic> [theta] [cents...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("semantic-dedup-bench")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     val theta = args.lift(1).map(_.toDouble).getOrElse(0.3)
     if (args(0) == "synthetic") syntheticSweep(spark, theta)
     else oracleShapedSweep(spark, args(0), theta,

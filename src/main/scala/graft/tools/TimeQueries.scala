@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{Session, SparkEntry}
 
 /** Ad-hoc timing of a NAMED subset of the declared queries — the
   * drill-down companion to [[graft.Bench]] (which times the fixed
@@ -28,21 +26,7 @@ object TimeQueries {
     require(unknown.isEmpty,
       s"unknown queries: ${unknown.mkString(", ")}; valid: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // same join-strategy defaults as graft.Bench (r15) so drill-down
-      // numbers stay comparable to the bench record; same env overrides
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "67108864"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.cpus)
     // experiment hook: SPARK_GRAFT_EXTRA_CONF="key=value;key=value" sets
     // arbitrary session confs before timing (A/B one knob per run)
     sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "").split(";")
@@ -51,7 +35,6 @@ object TimeQueries {
         val Array(k, v) = kv.split("=", 2)
         spark.conf.set(k, v)
       }
-    spark.sparkContext.setLogLevel("WARN")
 
     def run(name: String): Double = {
       val t0 = System.nanoTime()

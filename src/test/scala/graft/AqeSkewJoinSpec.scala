@@ -24,8 +24,11 @@ class AqeSkewJoinSpec extends SparkSuite {
     "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
     "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "65536",
     "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32768",
-    // force the sort-merge path: a broadcast join has no reducers to skew
-    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    // force the sort-merge path: a broadcast join has no reducers to
+    // skew, and AQE must not rewrite the skew-split sort-merge join to
+    // a shuffled-hash join
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "0")
 
   private def withConfs[A](confs: Seq[(String, String)])(body: => A): A = {
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }

@@ -158,11 +158,10 @@ class EdgeCasesSpec extends SparkSuite {
     Files.writeString(Paths.get(s"$dir/my doc one.txt"), "alpha beta")
     Files.writeString(Paths.get(s"$dir/plain.txt"), "beta gamma")
     Files.writeString(Paths.get(s"$dir/manifest.txt"), "2\nmy doc one.txt\nplain.txt\n")
-    val idx = graft.operators.InvertedIndex.buildIndex(spark,
-      graft.operators.InvertedIndex.readManifest(s"$dir/manifest.txt"))
+    val idx = graft.operators.InvertedIndex.buildIndexFromManifest(spark, s"$dir/manifest.txt")
     val lines = idx.select("line").collect().map(_.getString(0)).toSet
     assert(lines === Set("alpha:[1]", "beta:[1 2]", "gamma:[2]"),
-      s"spaced-filename file must not be dropped by the path join: $lines")
+      s"spaced-filename file must not be dropped by the manifest read: $lines")
   }
 
   test("rerunning into the same outDir clears stale letter files") {

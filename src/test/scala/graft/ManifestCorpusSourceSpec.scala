@@ -202,11 +202,4 @@ class ManifestCorpusSourceSpec extends SparkSuite {
     assert(scan.toBatch.planInputPartitions().length === 2,
       "runtime In(file_id) must drop the unreferenced file's partition")
   }
-
-  test("index built through the connector matches the legacy formulation") {
-    val viaV2 = InvertedIndex.buildIndexFromManifest(spark, manifest).select("line")
-    val legacy = InvertedIndex.buildIndex(spark, InvertedIndex.readManifest(manifest))
-      .select("line")
-    assert(viaV2.exceptAll(legacy).isEmpty && legacy.exceptAll(viaV2).isEmpty)
-  }
 }

@@ -13,14 +13,8 @@ import graft.functions.TextFunctions
   * local session, not a Scala reimplementation. */
 object NormalizerPropertySpec extends Properties("normalizer") {
 
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    // same engine as the gate sessions (shared-JVM getOrCreate may
-    // land on a SparkSuite session — keep the configs compatible)
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // the same call as SparkSuite: the specs share one session per JVM
+  private lazy val spark = Session.local(4)
 
   private def normalize(inputs: Seq[String]): Seq[String] = {
     import spark.implicits._

@@ -3,20 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs — one per suite (lazy), UTC, small
-  * shuffle fan-out for local mode. Installs [[graft.plans.GraftExtensions]]
-  * exactly like the Bench/Verify gate sessions, so every spec runs
-  * against the same engine the driver gates certify. */
+/** Shared local session for specs: the one [[Session.local]] engine
+  * config the Bench/Verify gates run, so every spec runs against the
+  * engine they certify. Four slots, because specs assert partition
+  * counts. */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 
   val sfDir = "/root/testdata/sf0.001"
 }
