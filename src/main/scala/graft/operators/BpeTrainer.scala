@@ -55,27 +55,6 @@ object BpeTrainer {
     out.toSeq
   }
 
-  /** Learn up to `merges` merges from a `(word, cnt)` relation (words
-    * already normalized); stops early when the best pair count falls
-    * below `minCount`. */
-  def train(wordCounts: DataFrame, merges: Int, minCount: Long = 2L): Seq[Merge] =
-    trainCapped(wordCounts, merges, minCount, localVocabCap)
-
-  /** Row cap for the driver-local merge-round fast path: the word-count
-    * table is VOCABULARY-bounded (Heaps' law — unique words, not
-    * tokens), so up to ~256k `(word, cnt)` rows (a few MB) it is
-    * decision metadata in the guide-§5 sense, and running the merge
-    * rounds driver-local (with incremental pair-count maintenance)
-    * replaces `merges`×2 tiny Spark jobs — whose cost is round-trip
-    * latency, not data — with ONE bounded collect. The collect is
-    * limit-guarded: at cap+1 rows the fast path abandons (one repeated
-    * corpus pass, over-cap case only) and the distributed loop below
-    * runs unchanged, exactly as it would on a 100 TB vocabulary.
-    * Env-overridable so the A/B and the over-cap spec stay one
-    * variable away. */
-  val localVocabCap: Long =
-    sys.env.getOrElse("SPARK_GRAFT_BPE_LOCAL_VOCAB", "262144").toLong
-
   /** Spark/DuckDB compare strings as unsigned UTF-8 bytes; Scala's
     * natural String order is UTF-16 code units — they diverge above the
     * BMP, so the local tie-break spells out the byte order. */
@@ -172,16 +151,22 @@ object BpeTrainer {
     learned.toSeq
   }
 
-  private[graft] def trainCapped(wordCounts: DataFrame, merges: Int,
-      minCount: Long, maxLocalVocab: Long): Seq[Merge] = {
+  /** Learn up to `merges` merges from a `(word, cnt)` relation (words
+    * already normalized); stops early when the best pair count falls
+    * below `minCount`. A table within [[DriverLocal.vocabCap]] rows runs
+    * the merge rounds driver-local ([[trainLocal]], incremental
+    * pair-count maintenance), replacing `merges`×2 tiny Spark jobs with
+    * ONE bounded collect; over the cap the distributed loop below runs
+    * unchanged, exactly as it would on a 100 TB vocabulary. */
+  def train(wordCounts: DataFrame, merges: Int, minCount: Long = 2L): Seq[Merge] = {
     val base = wordCounts
       .select(col("word"), col("cnt").cast("long").as("cnt"))
       .filter(length(col("word")) > 0)
-    if (maxLocalVocab > 0) {
-      val rows = base.limit((math.min(maxLocalVocab, Int.MaxValue - 2L) + 1).toInt).collect()
-      if (rows.length <= maxLocalVocab)
-        return trainLocal(rows.map(r => (r.getString(0), r.getLong(1))).toSeq,
-          merges, minCount)
+    DriverLocal.collectIfBounded(base,
+        DriverLocal.cap(base.sparkSession, DriverLocal.vocabCap)) match {
+      case Some(rows) =>
+        return trainLocal(rows.map(r => (r.getString(0), r.getLong(1))).toSeq, merges, minCount)
+      case None =>
     }
     var seg = base
       .withColumn("pieces", split(col("word"), ""))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** COMMUNITY DETECTION by synchronous label propagation (Raghavan,
@@ -57,28 +57,6 @@ import org.apache.spark.sql.functions._
   */
 object Communities {
 
-  /** Edge-count cap for the driver-local round-replica fast path shared
-    * by the three bounded-round graph operators here, counted on the
-    * SYMMETRIC distinct edge set (2× the canonical pairs — the count the
-    * loops already materialize eagerly, so the gate is free). Same
-    * rationale as [[Dedup.ccLocalEdgeCap]] (r16): ≤ ~2M symmetric edges
-    * × ~16 B ≈ 32 MB is bounded decision metadata (guide §5), and one
-    * collect + an exact in-memory replica of the SAME synchronous
-    * rounds replaces `rounds` × 2-3 tiny shuffle stages whose cost at
-    * this size is per-round job latency, not data. Over the cap the
-    * distributed loops run unchanged — at 100 TB every real graph blows
-    * past it and never touches the driver. Env-overridable so the A/B
-    * (and the equality specs) are one variable away. */
-  val localEdgeCap: Long =
-    sys.env.getOrElse("SPARK_GRAFT_GRAPH_LOCAL_EDGES", "2097152").toLong
-
-  /** Chunked local rows → DataFrame (the [[Dedup]] fast-path idiom). */
-  private def toDf(spark: org.apache.spark.sql.SparkSession,
-      rows: Seq[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, rows.length / 262144)), schema)
-
   /** Run `rounds` synchronous label-propagation rounds over the
     * undirected graph given by `pairs` (first two columns = endpoints;
     * symmetrized and de-duplicated here) on the node set `nodes`
@@ -86,11 +64,7 @@ object Communities {
     * if isolated). Returns (node, community) where community is the
     * round-`rounds` label (initial label = own id).
     */
-  def labelPropagation(pairs: DataFrame, nodes: DataFrame, rounds: Int): DataFrame =
-    labelPropagationCapped(pairs, nodes, rounds, localEdgeCap)
-
-  private[graft] def labelPropagationCapped(pairs: DataFrame, nodes: DataFrame,
-      rounds: Int, maxLocalEdges: Long): DataFrame = {
+  def labelPropagation(pairs: DataFrame, nodes: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"labelPropagation: rounds must be >= 1, got $rounds")
     val idCol = nodes.columns.head
     // the argmax tie-break encodes "smallest label" as max(-lbl):
@@ -119,16 +93,15 @@ object Communities {
       .persist()
     val edgeCount = edges.count() // one job: pair generator once, symmetrize+distinct once
     pairsOnce.unpersist()
-    // Driver-local fast path (see [[localEdgeCap]]): exact replica of
-    // the synchronous rounds below — same per-node argmax (highest
-    // count, ties to the smallest label), same fixed horizon, null
-    // endpoints ignored exactly as the equi-joins drop them. Same
-    // precondition as the distributed path: pair endpoints ⊆ nodes.
-    if (edgeCount <= maxLocalEdges) {
-      val out = localLabelRounds(edges, nodes, idCol, rounds, weighted = false)
-      edges.unpersist()
-      return out
-    }
+    // Driver-local fast path ([[DriverLocal.edgeCap]], counted on this
+    // symmetric set): exact replica of the synchronous rounds below —
+    // same per-node argmax (highest count, ties to the smallest label),
+    // same fixed horizon, null endpoints ignored exactly as the
+    // equi-joins drop them. Same precondition as the distributed path:
+    // pair endpoints ⊆ nodes.
+    val local = localEdges(edges, edgeCount)
+      .map(localLabelRounds(_, nodes, idCol, rounds, weighted = false)).orNull
+    if (local != null) { edges.unpersist(); return local }
     var labels = nodes
       .select(col(idCol).cast("long").as("node"), col(idCol).cast("long").as("lbl"))
     (1 to rounds).foreach { _ =>
@@ -174,11 +147,7 @@ object Communities {
     * row; the per-(node, label) reduce becomes a sum instead of a
     * count — still combine-able map-side). */
   def labelPropagationWeighted(pairs: DataFrame, nodes: DataFrame,
-      rounds: Int): DataFrame =
-    labelPropagationWeightedCapped(pairs, nodes, rounds, localEdgeCap)
-
-  private[graft] def labelPropagationWeightedCapped(pairs: DataFrame,
-      nodes: DataFrame, rounds: Int, maxLocalEdges: Long): DataFrame = {
+      rounds: Int): DataFrame = {
     require(rounds >= 1, s"labelPropagationWeighted: rounds must be >= 1, got $rounds")
     val idCol = nodes.columns.head
     require(nodes.schema.head.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType],
@@ -197,12 +166,12 @@ object Communities {
     val edgeCount = edges.count()
     pairsOnce.unpersist()
     // same fast path as [[labelPropagation]]; votes sum edge weights
-    if (edgeCount <= maxLocalEdges) {
-      val out = localLabelRounds(edges, nodes, idCol, rounds, weighted = true)
-      if (out != null) { edges.unpersist(); return out }
-      // null = a null weight was seen — fall through to the distributed
-      // loop rather than model Spark's null-struct aggregate ordering
-    }
+    // (null from the replica = a null weight was seen — fall through to
+    // the distributed loop rather than model Spark's null-struct
+    // aggregate ordering)
+    val local = localEdges(edges, edgeCount)
+      .map(localLabelRounds(_, nodes, idCol, rounds, weighted = true)).orNull
+    if (local != null) { edges.unpersist(); return local }
     var labels = nodes
       .select(col(idCol).cast("long").as("node"), col(idCol).cast("long").as("lbl"))
     (1 to rounds).foreach { _ =>
@@ -243,11 +212,7 @@ object Communities {
     * symmetric edge set against the survivor frame + one combine-able
     * degree count — shuffles on node id only, survivor frame is one
     * row per node. */
-  def kCore(pairs: DataFrame, nodes: DataFrame, k: Int, rounds: Int): DataFrame =
-    kCoreCapped(pairs, nodes, k, rounds, localEdgeCap)
-
-  private[graft] def kCoreCapped(pairs: DataFrame, nodes: DataFrame, k: Int,
-      rounds: Int, maxLocalEdges: Long): DataFrame = {
+  def kCore(pairs: DataFrame, nodes: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
     require(rounds >= 1, s"kCore: rounds must be >= 1, got $rounds")
     val idCol = nodes.columns.head
@@ -262,15 +227,12 @@ object Communities {
       .persist()
     val edgeCount = edges.count()
     pairsOnce.unpersist()
-    // Driver-local fast path (see [[localEdgeCap]]): exact replica of
-    // the peel rounds below. A node outside the edge set has no degree
-    // row and peels in round 1 (k >= 1) in both paths; endpoints ⊆
-    // nodes is the shared precondition.
-    if (edgeCount <= maxLocalEdges) {
-      val out = localKCore(edges, nodes, idCol, k, rounds)
-      edges.unpersist()
-      return out
-    }
+    // Driver-local fast path (see [[labelPropagation]]): exact replica
+    // of the peel rounds below. A node outside the edge set has no
+    // degree row and peels in round 1 (k >= 1) in both paths; endpoints
+    // ⊆ nodes is the shared precondition.
+    val local = localEdges(edges, edgeCount).map(localKCore(_, nodes, idCol, k, rounds)).orNull
+    if (local != null) { edges.unpersist(); return local }
     val all = nodes.select(col(idCol).cast("long").as("node"))
     var alive = all
     (1 to rounds).foreach { _ =>
@@ -299,19 +261,26 @@ object Communities {
     out
   }
 
-  /** Driver-local replica of the synchronous LPA rounds over a bounded
-    * SYMMETRIC distinct edge frame (src, dst[, w]): per round, every
-    * edge delivers dst's current label to src; winner = highest
-    * count/weight-sum, ties to the smallest label; nodes without votes
-    * keep their label. Null endpoints are skipped (the distributed
-    * equi-joins drop them identically). Returns the full (node,
-    * community) frame via a Spark-side left join against `nodes`, or
-    * NULL when `weighted` and a null weight is seen (caller falls back
-    * to the distributed loop). */
-  private def localLabelRounds(edges: DataFrame, nodes: DataFrame,
-      idCol: String, rounds: Int, weighted: Boolean): DataFrame = {
+  /** The rows of the symmetric edge frame when its exact `count` is
+    * within [[DriverLocal.edgeCap]]; no Spark job otherwise. */
+  private def localEdges(edges: DataFrame,
+      count: Long): Option[Array[Row]] = {
+    val cap = DriverLocal.cap(edges.sparkSession, DriverLocal.edgeCap)
+    if (count <= cap) DriverLocal.collectIfBounded(edges, cap) else None
+  }
+
+  /** Driver-local replica of the synchronous LPA rounds over the
+    * collected rows of a SYMMETRIC distinct edge frame (src, dst[, w]):
+    * per round, every edge delivers dst's current label to src; winner
+    * = highest count/weight-sum, ties to the smallest label; nodes
+    * without votes keep their label. Null endpoints are skipped (the
+    * distributed equi-joins drop them identically). Returns the full
+    * (node, community) frame via a Spark-side left join against
+    * `nodes`, or NULL when `weighted` and a null weight is seen (caller
+    * falls back to the distributed loop). */
+  private def localLabelRounds(rows: Array[Row],
+      nodes: DataFrame, idCol: String, rounds: Int, weighted: Boolean): DataFrame = {
     import scala.collection.mutable
-    val rows = edges.collect()
     val srcs = mutable.ArrayBuffer.empty[Long]
     val dsts = mutable.ArrayBuffer.empty[Long]
     val ws = mutable.ArrayBuffer.empty[Long]
@@ -348,28 +317,27 @@ object Communities {
         lbl(node) = bestL
       }
     }
-    val spark = edges.sparkSession
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("node",
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("__loc_lbl",
         org.apache.spark.sql.types.LongType, nullable = false)))
-    val loc = toDf(spark,
-      lbl.toSeq.map { case (n, l) => org.apache.spark.sql.Row(n, l) }, schema)
+    val loc = DriverLocal.toDf(nodes.sparkSession,
+      lbl.toSeq.map { case (n, l) => Row(n, l) }, schema)
     nodes.select(col(idCol).cast("long").as("node"))
       .join(loc, Seq("node"), "left")
       .select(col("node"), coalesce(col("__loc_lbl"), col("node")).as("community"))
   }
 
-  /** Driver-local replica of the kCore peel rounds over a bounded
-    * SYMMETRIC distinct edge frame: alive starts as the edge-incident
-    * node set (a node with no edges peels in round 1 under k >= 1 in
-    * both paths); per round, nodes whose alive-degree < k peel; the
-    * final core_degree is the degree within the surviving set. */
-  private def localKCore(edges: DataFrame, nodes: DataFrame, idCol: String,
-      k: Int, rounds: Int): DataFrame = {
+  /** Driver-local replica of the kCore peel rounds over the collected
+    * rows of a SYMMETRIC distinct edge frame: alive starts as the
+    * edge-incident node set (a node with no edges peels in round 1
+    * under k >= 1 in both paths); per round, nodes whose alive-degree
+    * < k peel; the final core_degree is the degree within the
+    * surviving set. */
+  private def localKCore(rows: Array[Row], nodes: DataFrame,
+      idCol: String, k: Int, rounds: Int): DataFrame = {
     import scala.collection.mutable
-    val rows = edges.collect()
     val srcs = mutable.ArrayBuffer.empty[Long]
     val dsts = mutable.ArrayBuffer.empty[Long]
     var i = 0
@@ -395,15 +363,14 @@ object Communities {
       alive.filterInPlace(n => deg.getOrElse(n, 0L) >= k)
     }
     val coreDeg = aliveDeg()
-    val spark = edges.sparkSession
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("node",
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("__core_degree",
         org.apache.spark.sql.types.LongType, nullable = false)))
-    val loc = toDf(spark,
+    val loc = DriverLocal.toDf(nodes.sparkSession,
       alive.toSeq.map(n =>
-        org.apache.spark.sql.Row(n, coreDeg.getOrElse(n, 0L))), schema)
+        Row(n, coreDeg.getOrElse(n, 0L))), schema)
     nodes.select(col(idCol).cast("long").as("node"))
       .join(loc.withColumn("__in_core", lit(true)), Seq("node"), "left")
       .select(col("node"),

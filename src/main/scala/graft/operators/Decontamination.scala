@@ -105,7 +105,9 @@ object Decontamination {
   def reportBloomPrefiltered(corpus: DataFrame, benchmark: DataFrame, idCol: String,
       textCol: String, n: Int, minOverlap: Int, expectedItems: Long = 100000L): DataFrame = {
     val spark = corpus.sparkSession
-    graft.plans.GraftFunctions.register(spark)
+    // sessions from graft.Session inject the graft functions already
+    if (!spark.catalog.functionExists("bloom_filter_agg"))
+      graft.plans.GraftFunctions.register(spark)
     def grams =
       array_distinct(TextFunctions.wordShingles(
         TextFunctions.normalizedWords(col(textCol)), n))

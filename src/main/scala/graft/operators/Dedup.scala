@@ -294,80 +294,7 @@ object Dedup {
     *              become their own cluster)
     * @return (doc_id, cluster_id)
     */
-  def dedupClusters(pairs: DataFrame, nodes: DataFrame): DataFrame =
-    dedupClustersCapped(pairs, nodes, ccLocalEdgeCap)
-
-  /** Edge-count cap for the driver-local union-find fast path shared by
-    * [[dedupClusters]] and [[dedupClustersStar]]: a DISTINCT edge list
-    * at or under the cap (~1M edges × ~30 B ≈ 30 MB) is bounded
-    * metadata in the [[LocalKMeans]]/BPE-vocab sense (guide §5 allows
-    * the driver to hold decision tables of this size), and a single
-    * collect + union-find replaces O(log n) iterative rounds whose cost
-    * at this size is pure per-round job/exchange latency, not data
-    * (measured: q157's CC leg 5.35 s → sub-second over 2 020 edges).
-    * Above the cap nothing changes: the distributed fixpoint loops run
-    * exactly as before — at 100 TB every real dedup/kNN edge list blows
-    * far past the cap and never touches the driver. Env-overridable so
-    * the A/B (and the over-cap spec) is one variable away. */
-  val ccLocalEdgeCap: Long =
-    sys.env.getOrElse("SPARK_GRAFT_CC_LOCAL_EDGES", "1048576").toLong
-
-  /** Driver-local connected components over an ALREADY-BOUNDED edge
-    * frame (any orientation, duplicates fine, null endpoints ignored —
-    * matching the distributed paths, where a null id never equi-joins).
-    * The component MIN label is deliberately computed by Spark (one
-    * tiny groupBy + join over the collected node set), not by Scala
-    * ordering, so string/binary ids order identically to the
-    * distributed fixpoint (UTF-8 byte order, not UTF-16 code units). */
-  private def localComponentLabels(edges: DataFrame): DataFrame = {
-    import scala.collection.mutable
-    val spark = edges.sparkSession
-    val rows = edges.collect()
-    // Array[Byte] hashes by identity — wrap binary ids in a value-equal key
-    def key(v: Any): Any = v match {
-      case b: Array[Byte] => b.toSeq
-      case x => x
-    }
-    val idx = mutable.HashMap.empty[Any, Int]
-    val vals = mutable.ArrayBuffer.empty[Any]
-    val parent = mutable.ArrayBuffer.empty[Int]
-    val rank = mutable.ArrayBuffer.empty[Int]
-    def nodeIdx(v: Any): Int = idx.getOrElseUpdate(key(v), {
-      vals += v; parent += vals.length - 1; rank += 0; vals.length - 1
-    })
-    def find(x: Int): Int = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    rows.foreach { r =>
-      if (!r.isNullAt(0) && !r.isNullAt(1)) {
-        val a = find(nodeIdx(r.get(0)))
-        val b = find(nodeIdx(r.get(1)))
-        if (a != b) {
-          if (rank(a) < rank(b)) parent(a) = b
-          else if (rank(b) < rank(a)) parent(b) = a
-          else { parent(b) = a; rank(a) += 1 }
-        }
-      }
-    }
-    val nodeType = edges.schema.head.dataType
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", nodeType),
-      org.apache.spark.sql.types.StructField("__comp",
-        org.apache.spark.sql.types.IntegerType, nullable = false)))
-    val out: Seq[org.apache.spark.sql.Row] =
-      vals.indices.map(i => org.apache.spark.sql.Row(vals(i), find(i)))
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(out, math.max(1, out.length / 262144)), schema)
-    val mins = df.groupBy("__comp").agg(min("doc_id").as("cluster_id"))
-    df.join(mins, "__comp").select("doc_id", "cluster_id")
-  }
-
-  private[graft] def dedupClustersCapped(pairs: DataFrame, nodes: DataFrame,
-      maxLocalEdges: Long): DataFrame = {
+  def dedupClusters(pairs: DataFrame, nodes: DataFrame): DataFrame = {
     val idCol = nodes.columns.head
     // the decimal label-sum convergence scalar needs numeric ids: a
     // non-numeric id casts to NULL, every round sums to zero, and the
@@ -389,22 +316,15 @@ object Dedup {
       .union(pairsOnce.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .persist()
-    // Driver-local fast path (see [[ccLocalEdgeCap]]): the limit-probe is
-    // bounded (the scan short-circuits at cap+1 rows) and the symmetric
-    // set is 2× the canonical edges, so the cap doubles here. Contract
-    // note: identical output under the documented precondition that pair
-    // endpoints ⊆ nodes (the same precondition under which this variant
-    // and [[dedupClustersStar]] agree at all).
-    val capSym = math.min(maxLocalEdges * 2, Int.MaxValue.toLong - 1)
-    if (maxLocalEdges > 0 && edges.limit((capSym + 1).toInt).count() <= capSym) {
-      val locLabels = localComponentLabels(edges)
-      val out = nodes.select(col(idCol).as("doc_id"))
-        .join(locLabels, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-      edges.unpersist()
-      return out
-    }
+    // Driver-local fast path ([[DriverLocal.edgeCap]], counted on this
+    // symmetric set). Contract note: identical output under the
+    // documented precondition that pair endpoints ⊆ nodes (the same
+    // precondition under which this variant and [[dedupClustersStar]]
+    // agree at all).
+    val local = DriverLocal.collectIfBounded(edges,
+        DriverLocal.cap(edges.sparkSession, DriverLocal.edgeCap))
+      .map(rows => labelNodes(nodes, localComponentLabels(edges, rows))).orNull
+    if (local != null) { edges.unpersist(); return local }
     var labels = nodes.select(col(idCol).as("doc_id"), col(idCol).as("label")).persist()
     def labelSum(df: DataFrame): java.math.BigDecimal =
       Option(df.agg(sum(col("label").cast("decimal(38,0)"))).head.getDecimal(0))
@@ -464,12 +384,7 @@ object Dedup {
     * @param nodes one-column DataFrame of ALL node ids
     * @return (doc_id, cluster_id) — identical contract to [[dedupClusters]]
     */
-  def dedupClustersStar(pairs: DataFrame, nodes: DataFrame): DataFrame =
-    dedupClustersStarCapped(pairs, nodes, ccLocalEdgeCap)
-
-  private[graft] def dedupClustersStarCapped(pairs: DataFrame, nodes: DataFrame,
-      maxLocalEdges: Long): DataFrame = {
-    val idCol = nodes.columns.head
+  def dedupClustersStar(pairs: DataFrame, nodes: DataFrame): DataFrame = {
     val Array(pa, pb) = pairs.columns.take(2)
     var edges = pairs
       .select(greatest(col(pa), col(pb)).as("u"), least(col(pa), col(pb)).as("v"))
@@ -477,18 +392,14 @@ object Dedup {
       .distinct()
       .persist()
     val edgeCount = edges.count()
-    // Driver-local fast path over the bounded distinct edge set (see
-    // [[ccLocalEdgeCap]]); over the cap, the O(log n) star contraction
-    // below runs unchanged.
-    if (edgeCount <= maxLocalEdges) {
-      val locLabels = localComponentLabels(edges)
-      val out = nodes.select(col(idCol).as("doc_id"))
-        .join(locLabels, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-      edges.unpersist()
-      return out
-    }
+    // Driver-local fast path over the bounded distinct edge set: these
+    // edges are canonical, so 2× the count is the symmetric count
+    // [[DriverLocal.edgeCap]] bounds. Over the cap, the O(log n) star
+    // contraction below runs unchanged.
+    val cap = DriverLocal.cap(edges.sparkSession, DriverLocal.edgeCap)
+    val local = (if (2 * edgeCount <= cap) DriverLocal.collectIfBounded(edges, cap) else None)
+      .map(rows => labelNodes(nodes, localComponentLabels(edges, rows))).orNull
+    if (local != null) { edges.unpersist(); return local }
 
     // large-star: symmetrize, m(u) = min(N(u) ∪ {u}), re-point larger
     // neighbors v > u at m. m ≤ u < v keeps the (bigger, smaller)
@@ -543,12 +454,65 @@ object Dedup {
 
     // fixpoint edges are (member, componentMin) stars; min() guards the
     // (impossible at fixpoint, cheap to keep) multi-edge case
-    val labels = edges.groupBy(col("u").as("doc_id")).agg(min("v").as("cluster_id"))
-    val out = nodes.select(col(idCol).as("doc_id"))
-      .join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
+    val out = labelNodes(nodes,
+      edges.groupBy(col("u").as("doc_id")).agg(min("v").as("cluster_id")))
     edges.unpersist()
     out
+  }
+
+  /** (doc_id, cluster_id) for every node of `nodes`: its label in
+    * `labels` (doc_id, cluster_id), or its own id when it has none (a
+    * node without edges is its own cluster). */
+  private def labelNodes(nodes: DataFrame, labels: DataFrame): DataFrame =
+    nodes.select(col(nodes.columns.head).as("doc_id"))
+      .join(labels, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
+
+  /** Driver-local connected components over the collected `rows` of a
+    * bounded edge frame `edges` (any orientation, duplicates fine, null
+    * endpoints ignored — matching the distributed paths, where a null id
+    * never equi-joins). The component MIN label is deliberately computed
+    * by Spark (one tiny groupBy + join over the collected node set), not
+    * by Scala ordering, so string/binary ids order identically to the
+    * distributed fixpoint (UTF-8 byte order, not UTF-16 code units). */
+  private def localComponentLabels(edges: DataFrame,
+      rows: Array[org.apache.spark.sql.Row]): DataFrame = {
+    import scala.collection.mutable
+    val idx = mutable.HashMap.empty[Any, Int]
+    val vals = mutable.ArrayBuffer.empty[Any]
+    val parent = mutable.ArrayBuffer.empty[Int]
+    val rank = mutable.ArrayBuffer.empty[Int]
+    def nodeIdx(v: Any): Int = idx.getOrElseUpdate(DriverLocal.key(v), {
+      vals += v; parent += vals.length - 1; rank += 0; vals.length - 1
+    })
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    rows.foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        val a = find(nodeIdx(r.get(0)))
+        val b = find(nodeIdx(r.get(1)))
+        if (a != b) {
+          if (rank(a) < rank(b)) parent(a) = b
+          else if (rank(b) < rank(a)) parent(b) = a
+          else { parent(b) = a; rank(a) += 1 }
+        }
+      }
+    }
+    val nodeType = edges.schema.head.dataType
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("doc_id", nodeType),
+      org.apache.spark.sql.types.StructField("__comp",
+        org.apache.spark.sql.types.IntegerType, nullable = false)))
+    val out: Seq[org.apache.spark.sql.Row] =
+      vals.indices.map(i => org.apache.spark.sql.Row(vals(i), find(i)))
+    val df = DriverLocal.toDf(edges.sparkSession, out, schema)
+    val mins = df.groupBy("__comp").agg(min("doc_id").as("cluster_id"))
+    df.join(mins, "__comp").select("doc_id", "cluster_id")
   }
 
   /** Exact n-gram Jaccard computed ONLY for the given candidate pairs —
@@ -921,10 +885,12 @@ object Dedup {
       textCol: String, n: Int, theta: Double, maxDocs: Long,
       maxShingles: Long = Long.MaxValue): DataFrame = {
     require(theta > 0.0, "theta must be positive (theta=0 would emit every doc pair)")
-    // limit-probe, not count(): scanning stops as soon as maxDocs+1 ids
-    // are seen, so the guard costs one bounded column-pruned pass
-    val probe = docs.select(col(idCol)).limit((maxDocs + 1).toInt).count()
-    if (probe > maxDocs)
+    // both caps read through [[DriverLocal.cap]], so the session switch
+    // forces the prefix path. Limit-probe, not count(): scanning stops as
+    // soon as docCap+1 ids are seen, so the guard costs one bounded
+    // column-pruned pass
+    val docCap = DriverLocal.cap(docs.sparkSession, maxDocs)
+    if (docCap <= 0 || docs.select(col(idCol)).limit((docCap + 1).toInt).count() > docCap)
       return ngramJaccardPairsPrefix(docs, idCol, textCol, n, theta)
     // hashed + sorted once per doc: the broadcast table packs primitive
     // longs (a fraction of the string arrays' footprint against the 8 GB
@@ -955,7 +921,7 @@ object Dedup {
     // pass it while blowing the 8 GB broadcast limit)
     val totalShingles = sets
       .agg(coalesce(sum(size(col("ss"))), lit(0L))).head.getLong(0)
-    if (totalShingles > maxShingles) {
+    if (totalShingles > DriverLocal.cap(docs.sparkSession, maxShingles)) {
       sets.unpersist()
       return ngramJaccardPairsPrefix(docs, idCol, textCol, n, theta)
     }

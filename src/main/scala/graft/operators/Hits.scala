@@ -51,30 +51,24 @@ object Hits {
     * `edges(src, dst, w)` (w a positive integral weight). Returns
     * (node, hub_units, auth_units) for every node; a node with no
     * out-edges has hub 0, with no in-edges authority 0. */
-  def run(edges: DataFrame, iterations: Int): DataFrame =
-    runCapped(edges, iterations, Communities.localEdgeCap)
-
-  private[graft] def runCapped(edges: DataFrame, iterations: Int,
-      maxLocalEdges: Long): DataFrame = {
+  def run(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, s"hits: iterations must be >= 1, got $iterations")
     val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
       .persist()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().persist()
     require(nodes.count() > 0, "hits: empty graph") // also materializes e once
-    // Driver-local fast path (r16, [[Communities.localEdgeCap]]'s
-    // rationale): a bounded edge list + pure deterministic integer
-    // arithmetic — the replica below reproduces every half-round
-    // bit-for-bit (same sums, same max-rescale floor divisions, same
-    // null-endpoint join semantics), replacing iterations × 2 shuffle
-    // stage chains whose cost at this size is round latency. The
-    // limit-probe reads the already-persisted edge cache.
-    val capProbe = math.min(maxLocalEdges, Int.MaxValue.toLong - 2)
-    if (maxLocalEdges > 0 && e.limit((capProbe + 1).toInt).count() <= capProbe) {
-      val out = localRun(e, nodes.schema.head.dataType, iterations)
-      e.unpersist(); nodes.unpersist()
-      return out
-    }
+    // Driver-local fast path ([[DriverLocal]]): a bounded edge list +
+    // pure deterministic integer arithmetic — the replica below
+    // reproduces every half-round bit-for-bit (same sums, same
+    // max-rescale floor divisions, same null-endpoint join semantics),
+    // replacing iterations × 2 shuffle stage chains whose cost at this
+    // size is round latency. The bounded collect reads the
+    // already-persisted edge cache.
+    val local = DriverLocal.collectIfBounded(e,
+        DriverLocal.cap(e.sparkSession, DriverLocal.edgeCap))
+      .map(localRun(e.sparkSession, _, nodes.schema.head.dataType, iterations)).orNull
+    if (local != null) { e.unpersist(); nodes.unpersist(); return local }
     var hubs = nodes.withColumn("h", lit(scale))
     var auths = nodes.withColumn("a", lit(0L))
     // r16 OPTIMIZATION (guide §5/§7.3): each half-round used to `.head`
@@ -120,22 +114,20 @@ object Hits {
   }
 
   /** Exact driver-local replica of the distributed half-rounds over a
-    * bounded collected edge list. Join-semantics fidelity, spelled out:
-    * a null-src edge row contributes to no authority raw (the hubs join
-    * drops it) but a null-DST group's raw still participates in the
-    * maxA rescale scalar; symmetrically for hubs; a null NODE always
-    * lands at (0, 0) because every node-keyed join misses on null; a
-    * null weight contributes nothing to a sum. All arithmetic is the
-    * same non-negative long sum + floor-division, so replication is
-    * bit-for-bit (spec-asserted vs the forced-distributed path). */
-  private def localRun(e: DataFrame,
+    * bounded collected edge list `rows` (src, dst, w). Join-semantics
+    * fidelity, spelled out: a null-src edge row contributes to no
+    * authority raw (the hubs join drops it) but a null-DST group's raw
+    * still participates in the maxA rescale scalar; symmetrically for
+    * hubs; a null NODE always lands at (0, 0) because every node-keyed
+    * join misses on null; a null weight contributes nothing to a sum.
+    * All arithmetic is the same non-negative long sum + floor-division,
+    * so replication is bit-for-bit (spec-asserted vs the
+    * forced-distributed path). */
+  private def localRun(spark: org.apache.spark.sql.SparkSession,
+      rows: Array[org.apache.spark.sql.Row],
       nodeType: org.apache.spark.sql.types.DataType, iterations: Int): DataFrame = {
     import scala.collection.mutable
-    def key(v: Any): Any = v match {
-      case b: Array[Byte] => b.toSeq
-      case x => x
-    }
-    val rows = e.collect()
+    import DriverLocal.key
     val vals = mutable.LinkedHashMap.empty[Any, Any] // key -> original value
     var hasNullNode = false
     rows.foreach { r =>
@@ -166,7 +158,6 @@ object Hits {
       val maxH = math.max(if (rawH.isEmpty) 1L else rawH.values.max, 1L)
       vals.keys.foreach { k => h(k) = rawH.getOrElse(k, 0L) * scale / maxH }
     }
-    val spark = e.sparkSession
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("node", nodeType),
       org.apache.spark.sql.types.StructField("hub_units",
@@ -176,8 +167,7 @@ object Hits {
     val out: Seq[org.apache.spark.sql.Row] =
       vals.map { case (k, v) => org.apache.spark.sql.Row(v, h(k), a(k)) }.toSeq ++
         (if (hasNullNode) Seq(org.apache.spark.sql.Row(null, 0L, 0L)) else Nil)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out, math.max(1, out.length / 262144)), schema)
+    DriverLocal.toDf(spark, out, schema)
   }
 
   /** Driver-side double-precision replay with max-normalization — the

@@ -36,11 +36,7 @@ object PageRank {
   /** Ranks after `iterations` rounds over `edges(src, dst, w)` (w a
     * positive integral weight). Returns (node, rank_units LONG). */
   def run(edges: DataFrame, iterations: Int,
-      dampNum: Long = 17L, dampDen: Long = 20L): DataFrame =
-    runCapped(edges, iterations, dampNum, dampDen, Communities.localEdgeCap)
-
-  private[graft] def runCapped(edges: DataFrame, iterations: Int,
-      dampNum: Long, dampDen: Long, maxLocalEdges: Long): DataFrame = {
+      dampNum: Long = 17L, dampDen: Long = 20L): DataFrame = {
     require(iterations >= 0 && dampNum > 0 && dampDen > dampNum)
     // r16: materialize the edge relation ONCE (lazy checkpoint — the
     // nodes.count() action below realizes it). It feeds nodes (twice),
@@ -55,17 +51,15 @@ object PageRank {
       .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
     val n = nodes.count() // scalar; node-table job, not corpus-sized
     require(n > 0, "empty graph")
-    // Driver-local fast path (r16, [[Communities.localEdgeCap]]'s
-    // rationale — same as [[Hits]]): bounded edges + pure deterministic
-    // integer arithmetic replicate the rounds exactly; the limit-probe
-    // reads the already-materialized edge checkpoint. Type-gated to
-    // identical src/dst types so local node keys match the union's
-    // coercion; the replica itself re-checks its node count against `n`
-    // and falls back on any mismatch.
-    if (localEligible(e, maxLocalEdges)) {
-      val local = localRun(e, None, n, iterations, dampNum, dampDen)
-      if (local != null) return local
-    }
+    // Driver-local fast path ([[DriverLocal]], same as [[Hits]]):
+    // bounded edges + pure deterministic integer arithmetic replicate the
+    // rounds exactly; the bounded collect reads the already-materialized
+    // edge checkpoint. Type-gated to identical src/dst types so local
+    // node keys match the union's coercion; the replica itself re-checks
+    // its node count against `n` and falls back on any mismatch.
+    val local = (if (localTyped(e)) DriverLocal.collectIfBounded(e, localCap(e)) else None)
+      .map(localRun(e, _, None, n, iterations, dampNum, dampDen)).orNull
+    if (local != null) return local
     // per-source normalization mass (outw) rides on each edge; pinned —
     // the per-round dangling anti-join re-reads it
     val outw = e.groupBy("src").agg(sum("w").as("outw")).localCheckpoint(false)
@@ -125,13 +119,7 @@ object PageRank {
     * nodes or isolated extras — extras receive teleport mass and leak
     * it back through the dangling term, the standard PPR closure). */
   def runPersonalized(edges: DataFrame, seeds: DataFrame, iterations: Int,
-      dampNum: Long = 17L, dampDen: Long = 20L): DataFrame =
-    runPersonalizedCapped(edges, seeds, iterations, dampNum, dampDen,
-      Communities.localEdgeCap)
-
-  private[graft] def runPersonalizedCapped(edges: DataFrame, seeds: DataFrame,
-      iterations: Int, dampNum: Long, dampDen: Long,
-      maxLocalEdges: Long): DataFrame = {
+      dampNum: Long = 17L, dampDen: Long = 20L): DataFrame = {
     require(iterations >= 0 && dampNum > 0 && dampDen > dampNum)
     // same single-materialization discipline as [[run]]
     val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
@@ -142,12 +130,14 @@ object PageRank {
     require(nS > 0, "empty seed set")
     // same fast path as [[run]]; the seed set is bounded by its own
     // already-computed count
-    if (localEligible(e, maxLocalEdges) && nS <= maxLocalEdges &&
-        sd.schema.head.dataType == e.schema.head.dataType) {
-      val local = localRun(e, Some((sd.collect(), nS)), -1L, iterations,
-        dampNum, dampDen)
-      if (local != null) return local
-    }
+    val cap = localCap(e)
+    val localRows =
+      if (localTyped(e) && nS <= cap && sd.schema.head.dataType == e.schema.head.dataType)
+        DriverLocal.collectIfBounded(e, cap)
+      else None
+    val local = localRows.map(localRun(e, _, Some((sd.collect(), nS)), -1L, iterations,
+      dampNum, dampDen)).orNull
+    if (local != null) return local
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .union(sd.select(col("node")))
@@ -183,25 +173,25 @@ object PageRank {
     ranks.select("node", "rank")
   }
 
-  /** Fast-path eligibility: bounded edge list (limit-probe against the
-    * already-materialized checkpoint) AND src/dst of one identical
-    * value-faithful type — integral/string/binary ids compare and hash
-    * by value exactly as Spark's distinct does; floats (NaN/-0.0
-    * normalization) and nested types stay distributed. */
-  private def localEligible(e: DataFrame, maxLocalEdges: Long): Boolean = {
+  /** Fast-path type gate: src/dst of one identical value-faithful type
+    * — integral/string/binary ids compare and hash by value exactly as
+    * Spark's distinct does; floats (NaN/-0.0 normalization) and nested
+    * types stay distributed. */
+  private def localTyped(e: DataFrame): Boolean = {
     import org.apache.spark.sql.types._
     val st = e.schema(0).dataType
-    val ok = st == e.schema(1).dataType && (st match {
+    st == e.schema(1).dataType && (st match {
       case ByteType | ShortType | IntegerType | LongType | StringType |
            BinaryType => true
       case _ => false
     })
-    val capProbe = math.min(maxLocalEdges, Int.MaxValue.toLong - 2)
-    ok && maxLocalEdges > 0 &&
-      e.limit((capProbe + 1).toInt).count() <= capProbe
   }
 
-  /** Exact driver-local replica of the distributed rounds. `seedInfo` =
+  private def localCap(e: DataFrame): Long =
+    DriverLocal.cap(e.sparkSession, DriverLocal.edgeCap)
+
+  /** Exact driver-local replica of the distributed rounds over the
+    * collected `rows` of the edge frame `e`. `seedInfo` =
     * Some((collected distinct seed rows, nS)) for the personalized
     * variant, None for uniform (then `nUniform` = the node count the
     * caller already computed; the replica re-derives it and returns
@@ -211,15 +201,11 @@ object PageRank {
     * row contributes nothing; an all-null-weight source still counts as
     * non-dangling (its outw GROUP exists); division is the same
     * non-negative floor div. */
-  private def localRun(e: DataFrame,
+  private def localRun(e: DataFrame, rows: Array[org.apache.spark.sql.Row],
       seedInfo: Option[(Array[org.apache.spark.sql.Row], Long)], nUniform: Long,
       iterations: Int, dampNum: Long, dampDen: Long): DataFrame = {
     import scala.collection.mutable
-    def key(v: Any): Any = v match {
-      case b: Array[Byte] => b.toSeq
-      case x => x
-    }
-    val rows = e.collect()
+    import DriverLocal.key
     val vals = mutable.LinkedHashMap.empty[Any, Any]
     var hasNullNode = false
     rows.foreach { r =>
@@ -287,7 +273,6 @@ object PageRank {
       nullRank = (if (seedInfo.isEmpty) base else 0L) +
         dampNum * (0L + (if (seedInfo.isEmpty) dang / n else 0L)) / dampDen
     }
-    val spark = e.sparkSession
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("node", e.schema.head.dataType),
       org.apache.spark.sql.types.StructField("rank",
@@ -295,8 +280,7 @@ object PageRank {
     val out: Seq[org.apache.spark.sql.Row] =
       vals.map { case (k, v) => org.apache.spark.sql.Row(v, rank(k)) }.toSeq ++
         (if (hasNullNode) Seq(org.apache.spark.sql.Row(null, nullRank)) else Nil)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out, math.max(1, out.length / 262144)), schema)
+    DriverLocal.toDf(e.sparkSession, out, schema)
   }
 
   /** Driver-side double-precision replay (the spec's independent

@@ -437,14 +437,16 @@ object Similarity {
     * (k×k id-hash block pairs — see the over-cap branch below): still
     * quadratic work (all-pairs at that size is the caller's documented,
     * oracle-mandated problem) but spread across every core, and the
-    * broadcast is never the thing that OOMs first. */
+    * broadcast is never the thing that OOMs first. `maxRows` is read
+    * through [[DriverLocal.cap]], so the session switch forces the
+    * blocked join. */
   def allPairsCosine(emb: DataFrame, idCol: String, vecCol: String,
       theta: Double, maxRows: Long = 250000L): DataFrame = {
     val nz = emb.filter(VectorFunctions.norm(col(vecCol)) > 0)
       .select(col(idCol), col(vecCol))
-    val probe = nz.select(col(idCol)).limit((maxRows + 1).toInt).count()
+    val cap = DriverLocal.cap(emb.sparkSession, maxRows)
     def cos = TextFunctions.round4(VectorFunctions.cosine(col("va"), col("vb")))
-    if (probe > maxRows) {
+    if (cap <= 0 || nz.select(col(idCol)).limit((cap + 1).toInt).count() > cap) {
       // r16 (r15 verdict "what's wrong" #1): the old over-cap fallback —
       // [[nearDupPairs]] over a CONSTANT bucket — equi-joined on one key
       // value, hashing every row to ONE partition so the n²/2 cosine

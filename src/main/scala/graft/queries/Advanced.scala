@@ -26,9 +26,8 @@ object Advanced {
     * on both engines) through `spark.sql`. One place for the view-setup
     * pattern instead of a copy per query. */
   private def sqlEntry(name: String, oracleSql: String, views: Seq[String],
-      sparkSql: Option[String] = None, withGraftFns: Boolean = false): QueryDef =
+      sparkSql: Option[String] = None): QueryDef =
     QueryDef(name, oracleSql) { (s, dir) =>
-      if (withGraftFns) graft.plans.GraftFunctions.register(s)
       views.foreach(v => t(s, dir, v).createOrReplaceTempView(v))
       s.sql(sparkSql.getOrElse(oracleSql).stripMargin)
     }
@@ -219,8 +218,7 @@ object Advanced {
         |         FROM orders WHERE o_orderpriority = '1-URGENT'),
         |        xxhash64(c_custkey))
         |  AND c_custkey IN (SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey"""),
-    withGraftFns = true)
+        |ORDER BY c_custkey"""))
 
   // --------------------------------------------------------------- Q54
   /** max_by/min_by semantics with a total tie-break: Spark's

@@ -5542,7 +5542,6 @@ object Extensions {
        |SELECT gram, CAST(count(*) AS BIGINT) AS n
        |FROM bg GROUP BY gram
        |ORDER BY n DESC, gram LIMIT 20""") { (s, dir) =>
-    graft.plans.GraftFunctions.register(s) // idempotent; Verify/Bench also inject via extensions
     t(s, dir, "documents").createOrReplaceTempView("q171_docs")
     s.sql("""SELECT g.gram, CAST(count(*) AS BIGINT) AS n
             |FROM q171_docs LATERAL VIEW ngrams_tf(text, 2) g AS pos, gram

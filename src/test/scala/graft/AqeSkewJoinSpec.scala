@@ -30,16 +30,6 @@ class AqeSkewJoinSpec extends SparkSuite {
     "spark.sql.autoBroadcastJoinThreshold" -> "-1",
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "0")
 
-  private def withConfs[A](confs: Seq[(String, String)])(body: => A): A = {
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** Zipf-hot fixture: half the big side lands on key 0, the rest
     * spreads over 1..1000; a fat payload makes the hot reducer's bytes
     * unambiguous. Deterministic (range + modular arithmetic). */
@@ -56,11 +46,11 @@ class AqeSkewJoinSpec extends SparkSuite {
     val (big, dim) = fixture
     // straggler-shaped reference result, AQE skew handling OFF
     val refRow = withConfs(aqeConfs :+
-        ("spark.sql.adaptive.skewJoin.enabled" -> "false")) {
+        ("spark.sql.adaptive.skewJoin.enabled" -> "false"): _*) {
       big.join(dim, "key").agg(count(lit(1)), sum($"w"), sum(length($"payload")))
         .collect().head
     }
-    withConfs(aqeConfs) {
+    withConfs(aqeConfs: _*) {
       val joined = big.join(dim, "key")
         .agg(count(lit(1)), sum($"w"), sum(length($"payload")))
       val row = joined.collect().head

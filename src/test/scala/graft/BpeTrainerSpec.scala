@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions, VocabTokenizer}
-import graft.operators.BpeTrainer
+import graft.operators.{BpeTrainer, DriverLocal}
 import graft.sources.Tables
 
 /** BPE vocabulary training: the distributed trainer against the
@@ -53,7 +53,7 @@ class BpeTrainerSpec extends SparkSuite {
     // cap=0 forces the DISTRIBUTED merge loop; the default path takes
     // the driver-local incremental trainer — all three must agree
     // merge-for-merge
-    val dist = BpeTrainer.trainCapped(wc, merges = 60, minCount = 2L, maxLocalVocab = 0L)
+    val dist = withConfs(DriverLocal.ConfKey -> "false") { BpeTrainer.train(wc, merges = 60) }
     val local = BpeTrainer.train(wc, merges = 60)
     val ref = BpeTrainer.trainReference(corpusCounts(sfDir), merges = 60)
     assert(dist == ref, s"first divergence: ${

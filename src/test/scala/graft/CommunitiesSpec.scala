@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Communities, Dedup}
+import graft.operators.{Communities, Dedup, DriverLocal}
 
 /** Deterministic synchronous label propagation (q211's operator):
   * hand-computed rounds on shaped graphs — the bridged-cliques split
@@ -164,20 +164,23 @@ class CommunitiesSpec extends SparkSuite {
     val n = nodes.toDF("id")
     for (rounds <- Seq(1, 3)) {
       val loc = Communities.labelPropagation(p, n, rounds)
-      val dist = Communities.labelPropagationCapped(p, n, rounds, maxLocalEdges = 0L)
+      val dist = withConfs(DriverLocal.ConfKey -> "false") {
+        Communities.labelPropagation(p, n, rounds)
+      }
       assert(loc.exceptAll(dist).isEmpty && dist.exceptAll(loc).isEmpty,
         s"LPA local != distributed at rounds=$rounds")
     }
     val wp = es.map { case (a, b) => (a, b, (a * 7 + b * 13) % 50 + 1) }
       .toDF("a", "b", "w")
     val wloc = Communities.labelPropagationWeighted(wp, n, rounds = 2)
-    val wdist = Communities.labelPropagationWeightedCapped(wp, n, rounds = 2,
-      maxLocalEdges = 0L)
+    val wdist = withConfs(DriverLocal.ConfKey -> "false") {
+      Communities.labelPropagationWeighted(wp, n, rounds = 2)
+    }
     assert(wloc.exceptAll(wdist).isEmpty && wdist.exceptAll(wloc).isEmpty,
       "weighted LPA local != distributed")
     for ((k, rounds) <- Seq((2, 1), (2, 3), (3, 2))) {
       val loc = Communities.kCore(p, n, k, rounds)
-      val dist = Communities.kCoreCapped(p, n, k, rounds, maxLocalEdges = 0L)
+      val dist = withConfs(DriverLocal.ConfKey -> "false") { Communities.kCore(p, n, k, rounds) }
       assert(loc.exceptAll(dist).isEmpty && dist.exceptAll(loc).isEmpty,
         s"kCore local != distributed at k=$k rounds=$rounds")
     }

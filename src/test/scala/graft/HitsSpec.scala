@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Hits
+import graft.operators.{DriverLocal, Hits}
 
 /** HITS hubs/authorities ([[graft.operators.Hits]]): exact-integer
   * max-normalized iteration, pinned against the double-precision
@@ -54,7 +54,7 @@ class HitsSpec extends SparkSuite {
     val df = res.toDF("src", "dst", "w")
     for (iters <- Seq(1, 3)) {
       val loc = Hits.run(df, iters)
-      val dist = Hits.runCapped(df, iters, maxLocalEdges = 0L)
+      val dist = withConfs(DriverLocal.ConfKey -> "false") { Hits.run(df, iters) }
       assert(loc.exceptAll(dist).isEmpty && dist.exceptAll(loc).isEmpty,
         s"HITS local != distributed at iterations=$iters")
     }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions, VectorFunctions}
-import graft.operators.{AsOfJoin, Dedup, Similarity, TextAnalysis}
+import graft.operators.{AsOfJoin, Dedup, DriverLocal, Similarity, TextAnalysis}
 import graft.sources.Tables
 
 /** Per-operator unit specs over the sf0.001 fixtures: shapes, invariants
@@ -710,13 +710,15 @@ class RegistrySpec extends SparkSuite {
     // driver-local union-find — both must label every node identically
     val localStar = Dedup.dedupClustersStar(pairsL, nodesL)
       .as[(Long, Long)].collect().toMap
-    val distStar = Dedup.dedupClustersStarCapped(pairsL, nodesL, 0L)
-      .as[(Long, Long)].collect().toMap
+    val distStar = withConfs(DriverLocal.ConfKey -> "false") {
+      Dedup.dedupClustersStar(pairsL, nodesL).as[(Long, Long)].collect().toMap
+    }
     assert(localStar === distStar)
     val localProp = Dedup.dedupClusters(pairsL, nodesL)
       .as[(Long, Long)].collect().toMap
-    val distProp = Dedup.dedupClustersCapped(pairsL, nodesL, 0L)
-      .as[(Long, Long)].collect().toMap
+    val distProp = withConfs(DriverLocal.ConfKey -> "false") {
+      Dedup.dedupClusters(pairsL, nodesL).as[(Long, Long)].collect().toMap
+    }
     assert(localProp === distProp)
     assert(localStar === localProp)
     // string ids: min label must follow Spark's ordering, not Scala's
@@ -724,8 +726,9 @@ class RegistrySpec extends SparkSuite {
     val nodesS = Seq("a", "b", "c", "x", "y", "solo").toDF("doc_id")
     val gotS = Dedup.dedupClustersStar(pairsS, nodesS)
       .as[(String, String)].collect().toMap
-    val distS = Dedup.dedupClustersStarCapped(pairsS, nodesS, 0L)
-      .as[(String, String)].collect().toMap
+    val distS = withConfs(DriverLocal.ConfKey -> "false") {
+      Dedup.dedupClustersStar(pairsS, nodesS).as[(String, String)].collect().toMap
+    }
     assert(gotS === distS)
     assert(gotS === Map("a" -> "a", "b" -> "a", "c" -> "a",
       "x" -> "x", "y" -> "x", "solo" -> "solo"))

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.PageRank
+import graft.operators.{DriverLocal, PageRank}
 
 /** Fixed-point PageRank: against the double-precision reference replay
   * (quantization-bounded), mass conservation, dangling-node handling,
@@ -95,7 +95,7 @@ class PageRankSpec extends SparkSuite {
     val df = es.toDF("src", "dst", "w")
     for (iters <- Seq(0, 1, 4)) {
       val loc = PageRank.run(df, iters)
-      val dist = PageRank.runCapped(df, iters, 17L, 20L, maxLocalEdges = 0L)
+      val dist = withConfs(DriverLocal.ConfKey -> "false") { PageRank.run(df, iters) }
       assert(loc.exceptAll(dist).isEmpty && dist.exceptAll(loc).isEmpty,
         s"PageRank local != distributed at iterations=$iters")
     }
@@ -103,8 +103,7 @@ class PageRankSpec extends SparkSuite {
     val seeds = Seq(1L, 2L, 3L, 999L).toDF("node")
     for (iters <- Seq(1, 4)) {
       val loc = PageRank.runPersonalized(df, seeds, iters)
-      val dist = PageRank.runPersonalizedCapped(df, seeds, iters, 17L, 20L,
-        maxLocalEdges = 0L)
+      val dist = withConfs(DriverLocal.ConfKey -> "false") { PageRank.runPersonalized(df, seeds, iters) }
       assert(loc.exceptAll(dist).isEmpty && dist.exceptAll(loc).isEmpty,
         s"PPR local != distributed at iterations=$iters")
     }
