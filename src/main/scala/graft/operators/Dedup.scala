@@ -896,18 +896,21 @@ object Dedup {
     // longs (a fraction of the string arrays' footprint against the 8 GB
     // broadcast limit) and the n²-evaluated jaccard is the single-branch
     // long merge (exact w.h.p., [[jaccardRefine]]'s budget).
-    // PERSISTED (intra-call cache, auto-released by the ContextCleaner
+    // LAZY localCheckpoint (intra-call, released by the ContextCleaner
     // once the result frame is dropped): the shingle pass (normalize +
     // shingle + distinct + hash + sort) used to run once per join side;
     // the broadcast-footprint probe below now materializes it ONCE and
-    // both sides read the cache — the probe is free and the tokenize
-    // pass count drops from 2 to 1. The cpuBound rebalance moves INSIDE
-    // the cache (it must run before persist twice over: a small parquet
-    // input arrives as 1-2 splits, which would pin the whole n² stream
-    // loop to as many cores — measured 28 s vs ~2 s at sf0.1 — and
-    // Dataset.inputFiles reads the OPTIMIZED plan, where the cache
-    // substitution has already swallowed the file scan, so a
-    // post-persist cpuBound sees zero files and skips the rebalance)
+    // both sides read the checkpoint — the probe is free and the
+    // tokenize pass count drops from 2 to 1. Not persist(): nothing can
+    // unpersist after the lazy result runs, so a persisted set stayed
+    // in the session's CacheManager for good and the next call over the
+    // same docs found it "already cached". The cpuBound rebalance moves
+    // INSIDE the checkpoint (it must run before it twice over: a small
+    // parquet input arrives as 1-2 splits, which would pin the whole n²
+    // stream loop to as many cores — measured 28 s vs ~2 s at sf0.1 —
+    // and Dataset.inputFiles reads the OPTIMIZED plan, where the
+    // checkpoint has already swallowed the file scan, so a
+    // post-checkpoint cpuBound sees zero files and skips the rebalance)
     val sets = graft.sources.Balance.cpuBound(docs
         .select(col(idCol).as("doc_id"),
           sort_array(transform(shingleArray(textCol, n), s => xxhash64(s))).as("ss"))
@@ -915,18 +918,16 @@ object Dedup {
         // them here also matches the self-join variants (no shared
         // shingle → no pair)
         .filter(size(col("ss")) > 0))
-      .persist()
+      .localCheckpoint(false)
     // second gate, on the BROADCAST footprint (r15 verdict: the doc cap
     // alone assumed ~50 shingles/doc — a long-document corpus could
     // pass it while blowing the 8 GB broadcast limit)
     val totalShingles = sets
       .agg(coalesce(sum(size(col("ss"))), lit(0L))).head.getLong(0)
-    if (totalShingles > DriverLocal.cap(docs.sparkSession, maxShingles)) {
-      sets.unpersist()
+    if (totalShingles > DriverLocal.cap(docs.sparkSession, maxShingles))
       return ngramJaccardPairsPrefix(docs, idCol, textCol, n, theta)
-    }
-    // the stream side drives the n² loop across the cache's (already
-    // rebalanced) partitions
+    // the stream side drives the n² loop across the checkpoint's
+    // (already rebalanced) partitions
     val a = sets.select(col("doc_id").as("doc_a"), col("ss").as("ss_a"))
     val b = sets.select(col("doc_id").as("doc_b"), col("ss").as("ss_b"))
     def jacc = TextFunctions.round4(

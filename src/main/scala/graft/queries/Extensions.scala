@@ -7565,16 +7565,32 @@ object Extensions {
   }
 
   // -------------------------------------------------------------- Q208
-  /** DATA-SKIPPING POINT/RANGE READ
-    * ([[graft.sources.VersionedTable.readAsOfWhere]]): the corpus
-    * lands as three streaming appends with DISJOINT id ranges (the
-    * log-shaped ingest every event/crawl table has), then a range
-    * lookup reads the table through the manifest's per-dir id stats —
-    * whole dirs prune at plan time (spec-asserted via inputFiles; at
-    * scale this is "open one dir, not N"). The oracle is the direct
-    * range filter over the source table: the hash match proves the
-    * PRUNED read returns exactly the full-scan answer — data skipping
-    * as optimization, never as the correctness carrier. */
+  /** A `graft-versioned` read of `tdir` as of version `v`, restricted
+    * by `where` (the connector prunes data dirs at plan time), that
+    * fails unless its executed plan kept fewer dirs than the version
+    * has (`kept_dirs=k/N`, k < N): a filter that stops pushing down
+    * fails the query, rather than hiding behind identical answers. */
+  private def prunedVersionedRead(s: SparkSession, tdir: String, v: Long,
+      where: org.apache.spark.sql.Column): DataFrame = {
+    val df = s.read.format("graft-versioned").option("versionAsOf", v)
+      .load(tdir).filter(where)
+    val plan = df.queryExecution.executedPlan.toString
+    val pruned = """kept_dirs=(\d+)/(\d+)""".r.findFirstMatchIn(plan)
+      .exists(m => m.group(1).toInt < m.group(2).toInt)
+    require(pruned, s"versioned read of $tdir by $where pruned no data dir:\n$plan")
+    df
+  }
+
+  /** DATA-SKIPPING POINT/RANGE READ (the `graft-versioned` connector's
+    * id-stat pruning): the corpus lands as three streaming appends with
+    * DISJOINT id ranges (the log-shaped ingest every event/crawl table
+    * has), then a range filter on `doc_id` reads the table through the
+    * manifest's per-dir id stats — whole dirs prune at plan time
+    * (gated in-query on the plan's `kept_dirs`; at scale this is "open
+    * one dir, not N"). The oracle is the direct range filter over the
+    * source table: the hash match proves the PRUNED read returns
+    * exactly the full-scan answer — data skipping as optimization,
+    * never as the correctness carrier. */
   val q208 = QueryDef("q208_skipping_read",
     """SELECT doc_id, CAST(strlen(text) AS BIGINT) AS n_chars
       |FROM documents WHERE doc_id BETWEEN 150 AND 250
@@ -7588,23 +7604,22 @@ object Extensions {
       tdir, "doc_id", Seq("text"), batchId = 1L)
     vt.commitStreamBatch(docs.filter(col("doc_id") >= 400),
       tdir, "doc_id", Seq("text"), batchId = 2L)
-    vt.readAsOfWhere(s, tdir, 3L, 150L, 250L)
+    prunedVersionedRead(s, tdir, 3L, col("doc_id").between(150L, 250L))
       .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"))
       .orderBy("doc_id")
   }
 
   // -------------------------------------------------------------- Q209
-  /** SECONDARY-COLUMN DATA-SKIPPING READ
-    * ([[graft.sources.VersionedTable.readAsOfWhereEq]], round 12): the
-    * corpus lands as per-language appends (the partitioned-ingest
-    * shape a multilingual crawl produces), each commit recording
-    * `lang` min/max per dir in the manifest (`statCols`), then a
-    * lang-filtered curation read prunes whole dirs at plan time —
-    * the read an id-only stats index can't serve (Delta keeps
-    * per-column stats for exactly this). Oracle = the direct lang
-    * filter over the source table: the hash match proves the pruned
-    * read returns exactly the full-scan answer; dir-count pruning
-    * itself is spec-asserted in VersionedTableSpec via inputFiles. */
+  /** SECONDARY-COLUMN DATA-SKIPPING READ (the connector's string-stat
+    * pruning, round 12): the corpus lands as per-language appends (the
+    * partitioned-ingest shape a multilingual crawl produces), each
+    * commit recording `lang` min/max per dir in the manifest
+    * (`statCols`), then a `lang = 'fr'` filter prunes whole dirs at
+    * plan time — the read an id-only stats index can't serve (Delta
+    * keeps per-column stats for exactly this). Oracle = the direct
+    * lang filter over the source table: the hash match proves the
+    * pruned read returns exactly the full-scan answer; the pruning
+    * itself is gated in-query on the plan's `kept_dirs`. */
   val q209 = QueryDef("q209_lang_skipping_read",
     """SELECT doc_id, lang, CAST(strlen(text) AS BIGINT) AS n_chars
       |FROM documents WHERE lang = 'fr'
@@ -7618,15 +7633,14 @@ object Extensions {
       vt.commit(docs.filter(col("lang") === l), tdir, "doc_id", Seq("text", "lang"),
         expectedVersion = i.toLong, mode = "append", statCols = Seq("lang"))
     }
-    vt.readAsOfWhereEq(s, tdir, 5L, "lang", "fr")
+    prunedVersionedRead(s, tdir, 5L, col("lang") === "fr")
       .select(col("doc_id"), col("lang"),
         length(col("text")).cast("long").as("n_chars"))
       .orderBy("doc_id")
   }
 
   // -------------------------------------------------------------- Q210
-  /** WARC POINT READ THROUGH FILTER PUSHDOWN (round 12 — the declared
-    * twin of [[graft.sources.WarcSource.readAt]]): documents land as a
+  /** WARC POINT READ THROUGH FILTER PUSHDOWN (round 12): documents land as a
     * per-record-gzipped, cdx-indexed archive; the read is plain SQL —
     * `filter(record_id IN ...)` on the DSv2 connector — which the scan
     * builder turns into member-range POINT partitions (the in-query
@@ -8090,21 +8104,19 @@ object Extensions {
   }
 
   // -------------------------------------------------------------- Q218
-  /** BLOOM-INDEXED POINT READ
-    * ([[graft.sources.VersionedTable.readAsOfPoint]], round 12 — the
-    * Delta/Hudi bloom-index move): the corpus lands as three appends
-    * with INTERLEAVED ids (doc_id mod 3 — every dir spans the full id
-    * range, so the q208 min/max stats can prune NOTHING), each commit
-    * recording a 1 KiB per-dir bloom over doc_id; the point read
-    * consults the blooms at plan time and opens only dirs that might
-    * hold the probes (gated in-query: fewer dirs opened than the
-    * full-scan read). Oracle = the direct IN filter over the source
-    * table: the hash match proves the bloom-pruned read returns
-    * exactly the full answer — a false positive costs one extra dir
-    * open, never a wrong row. Scale shape: the bloom build is one tiny
-    * aggregate per commit over the landed batch; the probe is
-    * driver-side bit tests at plan time — O(dirs), no data touched
-    * before the pruned scan. */
+  /** BLOOM-INDEXED POINT READ (the connector's bloom pruning, round 12
+    * — the Delta/Hudi bloom-index move): the corpus lands as three
+    * appends with INTERLEAVED ids (doc_id mod 3 — every dir spans the
+    * full id range, so the q208 min/max stats can prune NOTHING), each
+    * commit recording a 1 KiB per-dir bloom over doc_id; the `IN`
+    * filter consults the blooms at plan time and opens only dirs that
+    * might hold the probes (gated in-query on the plan's `kept_dirs`).
+    * Oracle = the direct IN filter over the source table: the hash
+    * match proves the bloom-pruned read returns exactly the full
+    * answer — a false positive costs one extra dir open, never a wrong
+    * row. Scale shape: the bloom build is one tiny aggregate per commit
+    * over the landed batch; the probe is driver-side bit tests at plan
+    * time — O(dirs), no data touched before the pruned scan. */
   val q218 = QueryDef("q218_bloom_point_read",
     """SELECT doc_id, CAST(strlen(text) AS BIGINT) AS n_chars
       |FROM documents WHERE doc_id IN (9, 33, 63, 93, 123)
@@ -8116,12 +8128,8 @@ object Extensions {
       vt.commit(docs.filter(col("doc_id") % 3 === r), tdir, "doc_id", Seq("text"),
         expectedVersion = r.toLong, mode = "append", bloomCols = Seq("doc_id"))
     }
-    val probes = Seq("9", "33", "63", "93", "123")
-    val hit = vt.readAsOfPoint(s, tdir, 3L, "doc_id", probes)
-    val dirsOpened = hit.inputFiles.map(f => f.substring(0, f.lastIndexOf('/'))).toSet.size
-    require(dirsOpened < 3,
-      s"bloom point read must prune interleaved dirs, opened $dirsOpened of 3")
-    hit.select(col("doc_id"), length(col("text")).cast("long").as("n_chars"))
+    prunedVersionedRead(s, tdir, 3L, col("doc_id").isin(9L, 33L, 63L, 93L, 123L))
+      .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"))
       .orderBy("doc_id")
   }
 

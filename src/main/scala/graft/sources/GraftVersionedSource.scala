@@ -31,10 +31,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * resolves through the SAME manifest chain as the Scala API
   * ([[VersionedTable.resolveVersion]]), so SQL and Scala can never
-  * read different snapshots for the same options — and gets the
-  * manifest's data skipping through ordinary filters instead of the
-  * dedicated `readAsOfWhere`/`readAsOfWhereEq`/`readAsOfPoint`
-  * entry points:
+  * read different snapshots for the same options. It is the ONE place
+  * the manifest's data skipping lives: ordinary filters, written on
+  * the raw column with literals of the column's type, prune dirs (a
+  * cast around the column does not push down — rows stay exact,
+  * nothing is pruned):
   *
   *  - **id range/point pruning**: `=`, `IN`, `<`, `<=`, `>`, `>=` on
   *    the table's id column intersect against the manifest's per-dir
@@ -56,9 +57,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Schema-evolution (merge-read) chains work by construction: each
   * partition reader emits the snapshot's UNION schema and NULL-fills
-  * fields its file predates — the same shape
-  * [[VersionedTable.prunedRead]] guarantees, enforced here per file
-  * rather than per plan.
+  * fields its file predates, so pruning to pre-evolution dirs (or to
+  * none) never changes the result's shape.
   *
   * Supported column types are the versioned table's committed shapes:
   * flat BOOLEAN/INT/BIGINT/FLOAT/DOUBLE/STRING/BINARY columns
@@ -114,7 +114,7 @@ class GraftVersionedSource extends TableProvider with DataSourceRegister {
     val path = Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("graft-versioned: .load(<tableDir>) is required"))
     GraftVersionedSource.metadataKind(options) match {
-      case Some(kind) => GraftVersionedMetadataTable.schemaOf(kind)
+      case Some(kind) => VersionedTable.metadataSchema(kind)
       case None =>
         val v = pinnedVersion(spark, path, options)
         if (v == EmptyChain)
@@ -728,14 +728,14 @@ class GraftVersionedWriteBuilder(path: String, info: LogicalWriteInfo,
   * the Delta `DESCRIBE HISTORY` / Iceberg `.files` surface):
   * `.option("metadata", "history")` serves [[VersionedTable.history]]'s
   * rows, `"files"` serves [[VersionedTable.files]] for the resolved
-  * version (versionAsOf/timestampAsOf compose). Rows are derived from
-  * the O(versions) driver-side manifests at PLAN time and shipped in
-  * the single input partition — metadata scale, no data files touched,
-  * same as the library calls they mirror. */
+  * version (versionAsOf/timestampAsOf compose). Rows come from the same
+  * builder as the library calls ([[VersionedTable.metadataRows]]), at
+  * PLAN time, and ship in the single input partition — metadata scale,
+  * no data files touched. */
 class GraftVersionedMetadataTable(path: String, kind: String, version: Long)
     extends Table with SupportsRead {
   override def name(): String = s"graft_versioned(`$path`@v$version).$kind"
-  override def schema(): StructType = GraftVersionedMetadataTable.schemaOf(kind)
+  override def schema(): StructType = VersionedTable.metadataSchema(kind)
   override def capabilities(): java.util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
@@ -744,54 +744,18 @@ class GraftVersionedMetadataTable(path: String, kind: String, version: Long)
     }
 }
 
-object GraftVersionedMetadataTable {
-  def schemaOf(kind: String): StructType = kind match {
-    case "history" => StructType(Seq(
-      StructField("version", LongType, nullable = false),
-      StructField("mode", StringType, nullable = false),
-      StructField("n_rows", LongType, nullable = false),
-      StructField("n_dirs", LongType, nullable = false),
-      StructField("batch_id", LongType, nullable = true),
-      StructField("committed_at_ms", LongType, nullable = true)))
-    case "files" => StructType(Seq(
-      StructField("dir_pos", LongType, nullable = false),
-      StructField("dir", StringType, nullable = false),
-      StructField("id_lo", LongType, nullable = true),
-      StructField("id_hi", LongType, nullable = true),
-      StructField("n_stat_cols", LongType, nullable = false),
-      StructField("has_bloom", BooleanType, nullable = false)))
-    case other => sys.error(s"graft-versioned: unknown metadata table '$other'")
-  }
-}
-
 /** One partition carrying the driver-derived metadata rows (tiny by
   * construction: one row per version or per data dir). */
 case class GraftVersionedMetadataPartition(rows: Seq[Seq[Any]]) extends InputPartition
 
 class GraftVersionedMetadataScan(path: String, kind: String, version: Long)
     extends Scan with Batch {
-  override def readSchema(): StructType = GraftVersionedMetadataTable.schemaOf(kind)
+  override def readSchema(): StructType = VersionedTable.metadataSchema(kind)
   override def toBatch: Batch = this
   override def description(): String = s"graft-versioned $path metadata=$kind"
   override def planInputPartitions(): Array[InputPartition] = {
-    val spark = SparkSession.active
-    val rows: Seq[Seq[Any]] = kind match {
-      case "history" =>
-        VersionedTable.versions(spark, path).map { v =>
-          val m = VersionedTable.readManifest(spark, path, v)
-          Seq[Any](v, m.mode, m.rows, m.dirs.size.toLong,
-            m.batchId.orNull, m.committedAtMs.orNull)
-        }
-      case "files" =>
-        val m = VersionedTable.readManifest(spark, path, version)
-        m.dirs.zipWithIndex.map { case (d, i) =>
-          val stats = m.dirStats.get(d)
-          Seq[Any](i.toLong, d, stats.map(_._1).orNull, stats.map(_._2).orNull,
-            m.dirStrStats.get(d).map(_.size.toLong).getOrElse(0L),
-            m.dirBlooms.get(d).exists(_.nonEmpty))
-        }
-    }
-    Array(GraftVersionedMetadataPartition(rows))
+    val rows = VersionedTable.metadataRows(SparkSession.active, path, kind, version)
+    Array(GraftVersionedMetadataPartition(rows.map(_.toSeq)))
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new PartitionReaderFactory {

@@ -1,8 +1,11 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
 
 /** VERSIONED SNAPSHOT TABLE WITH TIME TRAVEL — the commit-log layer
   * that ties the repo's storage pieces ([[Sinks.writeWithManifest]]'s
@@ -88,7 +91,7 @@ object VersionedTable {
     * schema gate's comparison key: names AND types must match exactly;
     * silent unionByName coercion or footer-resolution drift is never
     * allowed to evolve a table's schema as a side effect. */
-  private def schemaSig(s: org.apache.spark.sql.types.StructType) =
+  private def schemaSig(s: StructType) =
     s.fields.map(f => (f.name, f.dataType.sql)).sortBy(_._1).toSeq
 
   /** Committed versions present in the log, ascending (empty ⇒ no
@@ -234,36 +237,6 @@ object VersionedTable {
       paths: Seq[String]): DataFrame = {
     val r = spark.read
     (if (m.mergeRead) r.option("mergeSchema", "true") else r).parquet(paths: _*)
-  }
-
-  /** Dir-pruned read that preserves the version's FULL union schema
-    * (ADVICE r12): on a merge-read (schema-evolved) chain, pruning to
-    * dirs that all predate an evolution must NOT drop the evolved
-    * column — the row-level re-filter contract ("pruning is never the
-    * correctness carrier") extends to the result's SHAPE. The pruned
-    * scan is padded to the union schema with typed NULL columns,
-    * mirroring what the unpruned mergeSchema read produces for
-    * pre-evolution rows. Union-schema resolution touches parquet
-    * FOOTERS only (no data), and only on the evolved+partially-pruned
-    * path — unevolved tables keep the single-footer fast path. */
-  private def prunedRead(spark: SparkSession, m: Manifest, root: Path,
-      kept: Seq[String]): DataFrame = {
-    val all = m.dirs.map(d => new Path(root, d).toString)
-    if (kept.isEmpty)
-      // every dir provably pruned: empty relation with the version's
-      // exact schema (single footer, or the union over all dirs when
-      // the chain has evolved)
-      parquetRead(spark, m, if (m.mergeRead) all else Seq(all.head)).limit(0)
-    else if (!m.mergeRead || kept.size == m.dirs.size)
-      parquetRead(spark, m, kept.map(d => new Path(root, d).toString))
-    else {
-      val full = parquetRead(spark, m, all).schema
-      val part = parquetRead(spark, m, kept.map(d => new Path(root, d).toString))
-      val have = part.columns.toSet
-      part.select(full.fields.toSeq.map(f =>
-        if (have(f.name)) col(f.name)
-        else lit(null).cast(f.dataType).as(f.name)): _*)
-    }
   }
 
   /** Commit `df` as the next version of the table under optimistic
@@ -504,8 +477,9 @@ object VersionedTable {
         .getOrElse(newDg)
     // DATA-SKIPPING STATS (the Delta checkpoint-stats shape, reduced to
     // the id column): min/max of the NEW dir's id, carried forward for
-    // inherited dirs — [[readAsOfWhere]] prunes whole dirs against an id
-    // range at plan time. Numeric ids only (a null min/max — non-castable
+    // inherited dirs — the `graft-versioned` connector
+    // ([[GraftVersionedScanBuilder]]) prunes whole dirs against an id
+    // filter at plan time. Numeric ids only (a null min/max — non-castable
     // or empty dir — records no stats, and an unstatted dir is always
     // kept: pruning is an optimization, never the correctness carrier).
     val newDirStats: Option[(Long, Long)] =
@@ -524,8 +498,8 @@ object VersionedTable {
     // AS A STRING on the new dir, carried forward for inherited dirs
     // exactly like the id stats. One tiny aggregate over the already-
     // written dir; a null min/max (empty dir / all-null col) records no
-    // stats and [[readAsOfWhereEq]] keeps the dir — pruning stays an
-    // optimization, never the correctness carrier.
+    // stats and the connector's equality pruning keeps the dir —
+    // pruning stays an optimization, never the correctness carrier.
     val newStrStats: Map[String, (String, String)] =
       statCols.zipWithIndex.flatMap { case (c, i) =>
         val lo = 4 + 2 * i
@@ -553,7 +527,8 @@ object VersionedTable {
     // driver one <= 512 KiB bitmap — never the up-to-4M distinct
     // position Rows the old distinct().collect() materialized, so the
     // 2^22 cap is a bitmap-size knob, not a driver-memory ceiling.
-    // Probed driver-side at plan time by [[readAsOfPoint]]. A dir with
+    // Probed driver-side at plan time by the connector's `=`/`IN`
+    // pushdown ([[GraftVersionedScanBuilder]]). A dir with
     // no bloom for the column is always kept — same conservative
     // contract as the other stats.
     val newBlooms: Map[String, (Int, String)] =
@@ -767,56 +742,6 @@ object VersionedTable {
     readAsOf(spark, tableDir,
       resolveVersion(spark, tableDir, None, Some(tsMillis)))
 
-  /** DATA-SKIPPING point/range read: version `v` restricted to
-    * `idLo <= id <= idHi`, with whole data dirs PRUNED at plan time
-    * against the manifest's per-dir id min/max (the Delta
-    * checkpoint-stats recipe, id column only). A streaming-append
-    * table whose batches arrive in rough id order — the universal
-    * log-shaped ingest — answers a point lookup by opening ONE dir
-    * instead of N. Pruning is never the correctness carrier: the
-    * range filter is re-applied row-level, and a dir without stats
-    * (empty at commit, or a non-numeric id) is always kept. */
-  def readAsOfWhere(spark: SparkSession, tableDir: String, v: Long,
-      idLo: Long, idHi: Long): DataFrame = {
-    val m = readManifest(spark, tableDir, v)
-    val root = new Path(tableDir)
-    val kept = m.dirs.filter(d => m.dirStats.get(d) match {
-      case Some((lo, hi)) => hi >= idLo && lo <= idHi
-      case None => true // unstatted ⇒ conservative keep
-    })
-    prunedRead(spark, m, root, kept)
-      .filter(col(m.idCol).cast("long").between(idLo, idHi))
-  }
-
-  /** DATA-SKIPPING EQUALITY READ on a SECONDARY statted column
-    * (round-12: the id index can't serve a language/source-filtered
-    * curation read): version `v` restricted to `column = value`, with
-    * whole data dirs pruned at plan time against the manifest's
-    * per-dir string min/max for that column (recorded when the commit
-    * passed it in `statCols`). Lexicographic band check — exactly the
-    * parquet row-group min/max discipline lifted to dir granularity.
-    * Same correctness contract as [[readAsOfWhere]]: the equality
-    * filter is re-applied row-level, and a dir with no recorded stats
-    * for the column is always kept. */
-  def readAsOfWhereEq(spark: SparkSession, tableDir: String, v: Long,
-      column: String, value: String): DataFrame = {
-    val m = readManifest(spark, tableDir, v)
-    val root = new Path(tableDir)
-    val kept = m.dirs.filter(d => m.dirStrStats.get(d).flatMap(_.get(column)) match {
-      // UTF8String (UTF-8 byte) order — the order the commit's min/max
-      // aggregates ran under; Java UTF-16 order disagrees on
-      // supplementary-plane code points and could wrongly prune a dir
-      // holding the value (ADVICE r13)
-      case Some((lo, hi)) =>
-        val u = org.apache.spark.unsafe.types.UTF8String.fromString(value)
-        org.apache.spark.unsafe.types.UTF8String.fromString(lo).compareTo(u) <= 0 &&
-          u.compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(hi)) <= 0
-      case None => true // unstatted ⇒ conservative keep
-    })
-    prunedRead(spark, m, root, kept)
-      .filter(col(column).cast("string") === value)
-  }
-
   /** TABLE HISTORY (the DESCRIBE HISTORY surface): one row per
     * SURVIVING version — version, mode, manifest row count, dir count,
     * the streaming batch id (null for batch commits), and the commit
@@ -824,13 +749,8 @@ object VersionedTable {
     * data is touched. Vacuumed versions are absent by definition — the
     * history is what time travel can still reach, not an audit log
     * (an audit log must live OUTSIDE the thing being vacuumed). */
-  def history(spark: SparkSession, tableDir: String): DataFrame = {
-    import spark.implicits._
-    versions(spark, tableDir).map { v =>
-      val m = readManifest(spark, tableDir, v)
-      (v, m.mode, m.rows, m.dirs.size.toLong, m.batchId, m.committedAtMs)
-    }.toDF("version", "mode", "n_rows", "n_dirs", "batch_id", "committed_at_ms")
-  }
+  def history(spark: SparkSession, tableDir: String): DataFrame =
+    metadataTable(spark, tableDir, "history", 0L)
 
   /** FILES metadata table (the Iceberg `files` companion to
     * [[history]]): one row per data dir of version `v`, in
@@ -841,42 +761,53 @@ object VersionedTable {
     * columns, `has_bloom` whether any bloom is recorded. Dir names are
     * attempt-unique (uid-suffixed) — exposed for operators, but
     * position is the stable coordinate. Driver-side, no data touched. */
-  def files(spark: SparkSession, tableDir: String, v: Long): DataFrame = {
-    import spark.implicits._
-    val m = readManifest(spark, tableDir, v)
-    m.dirs.zipWithIndex.map { case (d, i) =>
-      val stats = m.dirStats.get(d)
-      (i.toLong, d, stats.map(_._1), stats.map(_._2),
-        m.dirStrStats.get(d).map(_.size.toLong).getOrElse(0L),
-        m.dirBlooms.get(d).exists(_.nonEmpty))
-    }.toDF("dir_pos", "dir", "id_lo", "id_hi", "n_stat_cols", "has_bloom")
+  def files(spark: SparkSession, tableDir: String, v: Long): DataFrame =
+    metadataTable(spark, tableDir, "files", v)
+
+  private def metadataTable(spark: SparkSession, tableDir: String,
+      kind: String, v: Long): DataFrame =
+    spark.createDataFrame(metadataRows(spark, tableDir, kind, v).asJava,
+      metadataSchema(kind))
+
+  /** Schema of the metadata table `kind` (`"history"` or `"files"`). */
+  private[sources] def metadataSchema(kind: String): StructType = kind match {
+    case "history" => StructType(Seq(
+      StructField("version", LongType, nullable = false),
+      StructField("mode", StringType, nullable = false),
+      StructField("n_rows", LongType, nullable = false),
+      StructField("n_dirs", LongType, nullable = false),
+      StructField("batch_id", LongType, nullable = true),
+      StructField("committed_at_ms", LongType, nullable = true)))
+    case "files" => StructType(Seq(
+      StructField("dir_pos", LongType, nullable = false),
+      StructField("dir", StringType, nullable = false),
+      StructField("id_lo", LongType, nullable = true),
+      StructField("id_hi", LongType, nullable = true),
+      StructField("n_stat_cols", LongType, nullable = false),
+      StructField("has_bloom", BooleanType, nullable = false)))
+    case other => sys.error(s"graft-versioned: unknown metadata table '$other'")
   }
 
-  /** BLOOM-INDEXED POINT/SET READ: version `v` restricted to
-    * `column IN values`, with whole data dirs pruned at plan time
-    * against the manifest's per-dir bloom for that column (recorded
-    * when the commit passed it in `bloomCols`). This is the read
-    * min/max stats CANNOT serve: when every append spans the full key
-    * range (round-robin shards, hash-bucketed feeds — the interleaved
-    * ingest shape), every dir's [lo, hi] band contains every probe, but
-    * the bloom still answers "definitely not here" per dir. A dir with
-    * no bloom for the column is always kept, and the IN filter is
-    * re-applied row-level — pruning is an optimization, never the
-    * correctness carrier (a false positive costs one extra dir open).
-    */
-  def readAsOfPoint(spark: SparkSession, tableDir: String, v: Long,
-      column: String, values: Seq[String]): DataFrame = {
-    require(values.nonEmpty, "readAsOfPoint: values must be non-empty")
-    val m = readManifest(spark, tableDir, v)
-    val root = new Path(tableDir)
-    val kept = m.dirs.filter(d => m.dirBlooms.get(d).flatMap(_.get(column)) match {
-      case Some((mBits, b64)) =>
-        val bits = java.util.BitSet.valueOf(java.util.Base64.getDecoder.decode(b64))
-        values.exists(v => bloomPositions(v, mBits).forall(bits.get))
-      case None => true // unindexed ⇒ conservative keep
-    })
-    prunedRead(spark, m, root, kept)
-      .filter(col(column).cast("string").isin(values: _*))
+  /** The rows of the metadata table `kind`, derived once from the
+    * manifests for both [[history]]/[[files]] and the connector's
+    * `metadata` option ([[GraftVersionedMetadataScan]]). `v` is the
+    * version `"files"` lists; `"history"` lists every surviving one. */
+  private[sources] def metadataRows(spark: SparkSession, tableDir: String,
+      kind: String, v: Long): Seq[Row] = kind match {
+    case "history" =>
+      versions(spark, tableDir).map { ver =>
+        val m = readManifest(spark, tableDir, ver)
+        Row(ver, m.mode, m.rows, m.dirs.size.toLong,
+          m.batchId.orNull, m.committedAtMs.orNull)
+      }
+    case "files" =>
+      val m = readManifest(spark, tableDir, v)
+      m.dirs.zipWithIndex.map { case (d, i) =>
+        val stats = m.dirStats.get(d)
+        Row(i.toLong, d, stats.map(_._1).orNull, stats.map(_._2).orNull,
+          m.dirStrStats.get(d).map(_.size.toLong).getOrElse(0L),
+          m.dirBlooms.get(d).exists(_.nonEmpty))
+      }
   }
 
   /** Re-derive (rows, digest) of version `v` from the CURRENT bytes and

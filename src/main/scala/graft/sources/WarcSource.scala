@@ -218,7 +218,6 @@ object WarcSource {
     * per record ≈ 0.006% of a crawl's bytes), read through the normal
     * distributed text scan. */
   def readIndex(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, split, udf}
     val p = new HPath(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val idxFiles = fs.listStatus(p).toSeq
@@ -226,75 +225,33 @@ object WarcSource {
       .map(_.getPath.toString)
     require(idxFiles.nonEmpty,
       s"warc-records: no .cdx index under $dir — write with cdxIndex = true")
+    cdxEntries(spark, idxFiles).drop("idx_file")
+  }
+
+  /** The one cdx line parser, behind [[readIndex]] and the scan's point
+    * lookup ([[WarcScan]]): each `urlenc(id) part offset length` line of
+    * `idxFiles` as `(record_id, warc_file, offset, length, idx_file)`,
+    * `idx_file` being the index file the line came from. A distributed
+    * text scan, so an archive's index never lands on the driver. */
+  private[sources] def cdxEntries(spark: org.apache.spark.sql.SparkSession,
+      idxFiles: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, input_file_name, split, udf}
     val dec = udf((s: String) =>
       java.net.URLDecoder.decode(s, StandardCharsets.UTF_8))
     spark.read.textFile(idxFiles: _*)
-      .select(split(col("value"), " ").as("t"))
+      .select(split(col("value"), " ").as("t"), input_file_name().as("idx_file"))
       .select(dec(col("t").getItem(0)).as("record_id"),
         col("t").getItem(1).as("warc_file"),
         col("t").getItem(2).cast("long").as("offset"),
-        col("t").getItem(3).cast("long").as("length"))
-  }
-
-  /** RECORD-LEVEL RANDOM ACCESS via the cdx index — the read pattern
-    * the per-record gzip members exist for (fetch N documents out of a
-    * 100 TB archive without decoding it): join the wanted ids against
-    * the index (ids broadcast — a lookup list is small by definition),
-    * then each task performs SEEK + ranged read of exactly the
-    * member's bytes per hit, gunzips that single member, and parses
-    * the one record. Hits are sorted (file, offset) within each task
-    * so seeks advance monotonically. Returns [[Schema]] rows;
-    * `record_offset` is the cdx offset (the part-file byte coordinate
-    * — compressed for `.warc.gz`), matching what a ranged GET uses.
-    * Contrast: the full scan's decode-to-skip pays the whole archive's
-    * decompression for any projection (BENCH_WARCPRUNE_r11 documented
-    * why) — the index turns that into O(hits) I/O. */
-  def readAt(spark: org.apache.spark.sql.SparkSession, dir: String,
-      ids: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    import spark.implicits._
-    val confCarrier = new SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
-    val hits = readIndex(spark, dir)
-      .join(broadcast(ids.toDF("record_id")), Seq("record_id"))
-      .select("warc_file", "offset", "length")
-    val rows = hits.rdd.mapPartitions { it =>
-      val sorted = it.map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-        .toArray.sortBy(t => (t._1, t._2))
-      var curFile: String = null
-      var in: org.apache.hadoop.fs.FSDataInputStream = null
-      def close(): Unit = if (in != null) { in.close(); in = null }
-      val out = sorted.iterator.map { case (fname, off, len) =>
-        if (fname != curFile) {
-          close()
-          val fp = new HPath(dir, fname)
-          in = fp.getFileSystem(confCarrier.value).open(fp)
-          curFile = fname
-        }
-        val (tpe, rid, uri, ct, clen, payload) =
-          readMemberFields(in, fname, off, len) // positioned ranged read
-        org.apache.spark.sql.Row(fname, off, tpe, rid, uri, ct, clen, payload)
-      }
-      // exhaust-then-close without buffering: wrap so the final hasNext
-      // closes the stream
-      new Iterator[org.apache.spark.sql.Row] {
-        override def hasNext: Boolean = {
-          val h = out.hasNext
-          if (!h) close()
-          h
-        }
-        override def next(): org.apache.spark.sql.Row = out.next()
-      }
-    }
-    spark.createDataFrame(rows, Schema)
+        col("t").getItem(3).cast("long").as("length"),
+        col("idx_file"))
   }
 
   /** Parse ONE complete WARC record from `bytes` (exactly the framing
     * [[recordBytes]] emits / a single decoded gzip member carries) into
     * its raw fields (warc_type, record_id, target_uri, content_type,
-    * content_length, payload) — shared by [[readAt]]'s Row path and the
-    * point-partition InternalRow reader. Loud, file+offset diagnostics
-    * like the streaming parser. */
+    * content_length, payload) for the point-partition reader. Loud,
+    * file+offset diagnostics like the streaming parser. */
   private[sources] def parseSingleFields(bytes: Array[Byte], file: String,
       offset: Long): (String, String, String, String, Long, Array[Byte]) = {
     def fail(msg: String): Nothing =
@@ -340,8 +297,8 @@ object WarcSource {
   }
 
   /** Read + decode ONE indexed member range: positioned ranged read of
-    * `length` bytes at `offset`, gunzip for `.gz` files, parse. Shared
-    * by [[readAt]] and the point-partition reader. */
+    * `length` bytes at `offset`, gunzip for `.gz` files, parse — the
+    * point-partition reader's one record fetch. */
   private[sources] def readMemberFields(in: org.apache.hadoop.fs.FSDataInputStream,
       file: String, offset: Long, length: Long)
       : (String, String, String, String, Long, Array[Byte]) = {
@@ -401,8 +358,10 @@ class WarcTable(path: String, maxBytes: Long) extends Table with SupportsRead {
   * cdx sibling ([[WarcSource.writeRecords]] `cdxIndex = true`), the
   * scan plans POINT partitions (seek + ranged member reads) instead of
   * full-file scans, so `spark.read.format("warc-records").load(dir)
-  * .filter($"record_id".isin(...))` gets [[WarcSource.readAt]]'s O(K)
-  * I/O through plain SQL. Every filter is also returned as residual:
+  * .filter($"record_id".isin(...))` fetches K records with O(K) ranged
+  * reads (seek + gunzip of one member each) instead of inflating the
+  * archive — the read pattern per-record gzip members exist for. Every
+  * filter is also returned as residual:
   * Spark re-applies them row-level, so the pushdown is never the
   * correctness carrier (missing/partial indexes just fall back to the
   * full scan — the ManifestCorpusSource discipline). */
@@ -581,9 +540,9 @@ class WarcScan(path: String, maxBytes: Long, required: StructType,
     * were pushed, any data file lacks its index sibling, or the probe
     * fails for any reason (fall back to the full scan: pushdown is an
     * access path, never the correctness carrier). The index probe is a
-    * distributed text scan + broadcast id join — the same shape as
-    * [[WarcSource.readAt]] — so a billion-record archive's index never
-    * lands on the driver; only the K hits do. */
+    * distributed text scan ([[WarcSource.cdxEntries]]) + broadcast id
+    * join, so a billion-record archive's index never lands on the
+    * driver; only the K hits do. */
   private lazy val pointHits: Option[Seq[(String, Long, Long)]] =
     pointIds.flatMap { ids =>
       try {
@@ -593,18 +552,9 @@ class WarcScan(path: String, maxBytes: Long, required: StructType,
             !idxFiles.forall(f => fs.exists(new HPath(f)))) None
         else {
           val spark = org.apache.spark.sql.SparkSession.active
-          import org.apache.spark.sql.functions.{broadcast, col,
-            input_file_name, split, udf}
+          import org.apache.spark.sql.functions.broadcast
           import spark.implicits._
-          val dec = udf((s: String) =>
-            java.net.URLDecoder.decode(s, StandardCharsets.UTF_8))
-          val hits = spark.read.textFile(idxFiles: _*)
-            .select(split(col("value"), " ").as("t"),
-              input_file_name().as("idx_file"))
-            .select(dec(col("t").getItem(0)).as("record_id"),
-              col("idx_file"),
-              col("t").getItem(2).cast("long").as("offset"),
-              col("t").getItem(3).cast("long").as("length"))
+          val hits = WarcSource.cdxEntries(spark, idxFiles)
             .join(broadcast(ids.toDF("record_id")), Seq("record_id"))
             .select("idx_file", "offset", "length")
             .collect()

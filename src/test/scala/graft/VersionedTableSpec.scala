@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sources.VersionedTable
@@ -15,6 +16,18 @@ class VersionedTableSpec extends SparkSuite {
   import spark.implicits._
 
   private def freshDir() = Files.createTempDirectory("vtab").toString + "/t"
+
+  /** Version `v` through the `graft-versioned` connector, the one
+    * read path that prunes data dirs. */
+  private def at(dir: String, v: Long): DataFrame =
+    spark.read.format("graft-versioned").option("versionAsOf", v).load(dir)
+
+  /** The `k/N` of the connector scan's `kept_dirs=k/N` in `df`'s plan. */
+  private def keptDirs(df: DataFrame): String = {
+    val plan = df.queryExecution.executedPlan.toString
+    """kept_dirs=(\d+/\d+)""".r.findFirstMatchIn(plan).map(_.group(1))
+      .getOrElse(fail(s"no graft-versioned scan in\n$plan"))
+  }
 
   test("overwrite + append commits; readAsOf reproduces each version exactly") {
     val dir = freshDir()
@@ -187,7 +200,8 @@ class VersionedTableSpec extends SparkSuite {
     assert(left == 1, "only the current version's dir survives")
   }
 
-  test("data skipping: readAsOfWhere prunes whole dirs against manifest id stats") {
+  test("data skipping: an id filter on the connector prunes whole dirs " +
+      "against manifest id stats") {
     val dir = freshDir()
     // log-shaped ingest: three appended batches with disjoint id ranges
     VersionedTable.commitStreamBatch((1L to 10L).map(i => (i, s"a$i")).toDF("id", "text"),
@@ -197,26 +211,26 @@ class VersionedTableSpec extends SparkSuite {
     VersionedTable.commitStreamBatch((21L to 30L).map(i => (i, s"c$i")).toDF("id", "text"),
       dir, "id", Seq("text"), 2L)
     // point lookup: only the middle batch's dir is opened
-    val hit = VersionedTable.readAsOfWhere(spark, dir, 3L, 15L, 15L)
+    val hit = at(dir, 3L).filter(col("id") === 15L)
     assert(hit.collect().map(r => (r.getLong(0), r.getString(1))).toSeq == Seq((15L, "b15")))
-    val openedDirs = hit.inputFiles.map(_.replaceAll("/[^/]*$", "")).distinct
-    assert(openedDirs.length == 1, s"expected 1 pruned dir, opened $openedDirs")
+    assert(keptDirs(hit) == "1/3")
     // range spanning two batches opens exactly two dirs
-    val span = VersionedTable.readAsOfWhere(spark, dir, 3L, 9L, 12L)
-    assert(span.count() == 4L)
-    assert(span.inputFiles.map(_.replaceAll("/[^/]*$", "")).distinct.length == 2)
+    val span = at(dir, 3L).filter(col("id").between(9L, 12L))
+    assert(span.count() == 4L && keptDirs(span) == "2/3")
     // fully out-of-range: zero dirs, empty result, schema intact
-    val none = VersionedTable.readAsOfWhere(spark, dir, 3L, 100L, 200L)
+    val none = at(dir, 3L).filter(col("id").between(100L, 200L))
+    assert(keptDirs(none) == "0/3")
     assert(none.count() == 0L && none.columns.toSeq == Seq("id", "text"))
     // pruning never carries correctness: time travel to v1 sees only batch 0
-    assert(VersionedTable.readAsOfWhere(spark, dir, 1L, 1L, 30L).count() == 10L)
-    // stats survive an overwrite (single fresh dir) and compact
+    assert(at(dir, 1L).filter(col("id").between(1L, 30L)).count() == 10L)
+    // stats survive compact: the one fresh dir still answers, and prunes a miss
     VersionedTable.compact(spark, dir)
-    val afterCompact = VersionedTable.readAsOfWhere(spark, dir, 4L, 15L, 15L)
-    assert(afterCompact.collect().head.getString(1) == "b15")
+    assert(at(dir, 4L).filter(col("id") === 15L).collect().head.getString(1) == "b15")
+    assert(keptDirs(at(dir, 4L).filter(col("id") === 99L)) == "0/1")
   }
 
-  test("data skipping on a secondary statted column: readAsOfWhereEq opens only matching dirs") {
+  test("data skipping on a secondary statted column: an equality filter " +
+      "opens only matching dirs") {
     val dir = freshDir()
     // partitioned-ingest shape: one append per language, lang statted
     Seq("de", "en", "fr").zipWithIndex.foreach { case (l, i) =>
@@ -226,21 +240,15 @@ class VersionedTableSpec extends SparkSuite {
         mode = "append", statCols = Seq("lang"))
     }
     // equality lookup: only the matching language's dir is opened
-    val hit = VersionedTable.readAsOfWhereEq(spark, dir, 3L, "lang", "en")
+    val hit = at(dir, 3L).filter(col("lang") === "en")
     assert(hit.collect().map(_.getString(2)).forall(_ == "en") && hit.count() == 5L)
-    val openedDirs = hit.inputFiles.map(_.replaceAll("/[^/]*$", "")).distinct
-    assert(openedDirs.length == 1, s"expected 1 pruned dir, opened ${openedDirs.toSeq}")
+    assert(keptDirs(hit) == "1/3")
     // no matching language: zero rows, schema intact, no dirs needed
-    val none = VersionedTable.readAsOfWhereEq(spark, dir, 3L, "lang", "zz")
+    val none = at(dir, 3L).filter(col("lang") === "zz")
+    assert(keptDirs(none) == "0/3")
     assert(none.count() == 0L && none.columns.toSeq == Seq("id", "text", "lang"))
-    // pruning never carries correctness: an UNSTATTED column keeps every
-    // dir (conservative) and still answers exactly
-    val unstatted = VersionedTable.readAsOfWhereEq(spark, dir, 3L, "text", "fr-doc3")
-    assert(unstatted.count() == 1L)
-    assert(unstatted.inputFiles.map(_.replaceAll("/[^/]*$", "")).distinct.length == 3)
     // the id stats coexist: both indexes recorded on the same commits
-    assert(VersionedTable.readAsOfWhere(spark, dir, 3L, 21L, 25L)
-      .inputFiles.map(_.replaceAll("/[^/]*$", "")).distinct.length == 1)
+    assert(keptDirs(at(dir, 3L).filter(col("id").between(21L, 25L))) == "1/3")
   }
 
   test("z-ordered compaction: per-file bounding boxes tighten on BOTH columns, content identical") {
@@ -393,19 +401,13 @@ class VersionedTableSpec extends SparkSuite {
     val v3 = VersionedTable.read(spark, dir)
     assert(v3.count() == 5L && v3.columns.sorted.toSeq == Seq("id", "lang", "text"))
     assert(v3.filter(col("lang").isNull).count() == 2L)
-    // skipping reads resolve the union schema too (incl. the all-pruned path)
-    assert(VersionedTable.readAsOfWhere(spark, dir, 3L, 5L, 5L)
-      .columns.sorted.toSeq == Seq("id", "lang", "text"))
-    assert(VersionedTable.readAsOfWhere(spark, dir, 3L, 99L, 100L)
-      .columns.sorted.toSeq == Seq("id", "lang", "text"))
-    // PARTIAL prune keeping only PRE-evolution dirs (ADVICE r13 fix):
-    // the evolved column must still appear, NULL-filled — pruning can
-    // never change the result's shape
-    val preOnly = VersionedTable.readAsOfWhere(spark, dir, 3L, 1L, 2L)
-    assert(preOnly.columns.sorted.toSeq == Seq("id", "lang", "text"))
-    assert(preOnly.collect().map(r =>
-      (r.getLong(r.fieldIndex("id")), Option(r.getAs[String]("lang")))).toSet
-      == Set((1L, None), (2L, None)))
+    // skipping reads resolve the union schema too (incl. the all-pruned
+    // path; a prune to pre-evolution dirs only is GraftVersionedSourceSpec's
+    // merge-read case)
+    val post = at(dir, 3L).filter(col("id") === 5L)
+    assert(keptDirs(post) == "1/3" && post.columns.sorted.toSeq == Seq("id", "lang", "text"))
+    val none = at(dir, 3L).filter(col("id").between(99L, 100L))
+    assert(keptDirs(none) == "0/3" && none.columns.sorted.toSeq == Seq("id", "lang", "text"))
     // guard rails: type drift stays refused even under the flag, a
     // dropped column stays refused, and evolving content cols is refused
     intercept[RuntimeException] {
@@ -429,34 +431,6 @@ class VersionedTableSpec extends SparkSuite {
     assert(VersionedTable.commit(v3.select("id", "text", "lang"),
       dir, "id", Seq("text", "lang"), 3L) == 4L)
     assert(VersionedTable.validateAsOf(spark, dir, 4L)._1)
-  }
-
-  test("bloom index: point reads prune interleaved-id dirs min/max cannot; " +
-      "misses open nothing; unindexed dirs stay conservative") {
-    val dir = freshDir()
-    // three appends, each spanning the FULL id range (ids ≡ r mod 3) —
-    // every dir's [lo, hi] contains every probe, so min/max is useless
-    (0 to 2).foreach { r =>
-      val rows = (0L until 300L).filter(_ % 3 == r).map(i => (i, s"t$i")).toDF("id", "text")
-      VersionedTable.commit(rows, dir, "id", Seq("text"), expectedVersion = r.toLong,
-        mode = "append", bloomCols = Seq("id"))
-    }
-    def dirsOf(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.inputFiles.map(f => f.substring(0, f.lastIndexOf('/'))).toSet
-    val all = VersionedTable.readAsOf(spark, dir, 3L)
-    assert(dirsOf(all).size == 3)
-    // probes from one residue class live in exactly one dir; bloom may
-    // false-positive another dir open, but must beat the 3-dir scan
-    // (values checked deterministic-hit-free for this fixture)
-    val hit = VersionedTable.readAsOfPoint(spark, dir, 3L, "id", Seq("9", "33", "63"))
-    assert(hit.collect().map(_.getLong(0)).sorted.toSeq == Seq(9L, 33L, 63L))
-    assert(dirsOf(hit).size < 3, s"bloom must prune: opened ${dirsOf(hit).size} dirs")
-    // an absent value: every bloom says no -> zero dirs, schema intact
-    val miss = VersionedTable.readAsOfPoint(spark, dir, 3L, "id", Seq("100000007"))
-    assert(miss.columns.toSeq == Seq("id", "text") && miss.count() == 0L)
-    // a column never bloom-indexed keeps every dir (conservative)
-    val unidx = VersionedTable.readAsOfPoint(spark, dir, 3L, "text", Seq("t9"))
-    assert(dirsOf(unidx).size == 3 && unidx.count() == 1L)
   }
 
   test("bloom probe positions: the driver JVM and the Spark expression agree exactly") {
@@ -486,8 +460,11 @@ class VersionedTableSpec extends SparkSuite {
 
   test("bloom index after compaction: blooms drop with the rewrite, reads stay correct") {
     val dir = freshDir()
+    // id 45 is left out: a miss INSIDE the dir's id band, which the
+    // min/max stats keep and only a bloom can prune
     (0 to 2).foreach { r =>
-      val rows = (0L until 90L).filter(_ % 3 == r).map(i => (i, s"t$i")).toDF("id", "text")
+      val rows = (0L until 90L).filter(i => i % 3 == r && i != 45L)
+        .map(i => (i, s"t$i")).toDF("id", "text")
       VersionedTable.commit(rows, dir, "id", Seq("text"), expectedVersion = r.toLong,
         mode = "append", bloomCols = Seq("id"))
     }
@@ -497,7 +474,8 @@ class VersionedTableSpec extends SparkSuite {
     val v = VersionedTable.currentVersion(spark, dir)
     val f = VersionedTable.files(spark, dir, v)
     assert(f.count() == 1L && f.filter(col("has_bloom")).count() == 0L)
-    val got = VersionedTable.readAsOfPoint(spark, dir, v, "id", Seq("7", "41"))
+    assert(keptDirs(at(dir, v).filter(col("id") === 45L)) == "1/1")
+    val got = at(dir, v).filter(col("id").isin(7L, 41L))
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(got == Seq(7L, 41L))
     // re-indexing compaction: compact(bloomCols=...) registers a fresh
@@ -505,10 +483,10 @@ class VersionedTableSpec extends SparkSuite {
     val v2 = VersionedTable.compact(spark, dir, bloomCols = Seq("id"))
     val f2 = VersionedTable.files(spark, dir, v2)
     assert(f2.count() == 1L && f2.filter(col("has_bloom")).count() == 1L)
-    val miss2 = VersionedTable.readAsOfPoint(spark, dir, v2, "id", Seq("100000007"))
-    assert(miss2.count() == 0L &&
-      miss2.inputFiles.isEmpty, "fresh bloom must answer a miss with zero dirs")
-    assert(VersionedTable.readAsOfPoint(spark, dir, v2, "id", Seq("7"))
+    val miss2 = at(dir, v2).filter(col("id") === 45L)
+    assert(keptDirs(miss2) == "0/1" && miss2.count() == 0L,
+      "fresh bloom must answer a miss with zero dirs")
+    assert(at(dir, v2).filter(col("id") === 7L)
       .collect().map(_.getLong(0)).toSeq == Seq(7L))
   }
 

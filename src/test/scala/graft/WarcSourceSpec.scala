@@ -144,28 +144,35 @@ class WarcSourceSpec extends SparkSuite {
     val idx = WarcSource.readIndex(spark, dir).collect()
     assert(idx.length == 40)
     assert(idx.forall(r => r.getLong(2) >= 0 && r.getLong(3) > 0))
-    // point reads: every column equal to the full scan's row (except
+    // point reads (a record_id filter the scan serves from the cdx
+    // index): every column equal to the full scan's row (except
     // record_offset, whose coordinate system differs by design: cdx =
     // compressed member offset, scan = decoded-stream offset)
     val wanted = Seq("urn:graft:cdx:001", "urn:graft:cdx:017", "urn:graft:cdx:040")
+    def pointRead(d: String, ids: Seq[String]) = {
+      val df = WarcSource.read(spark, d).filter(col("record_id").isin(ids: _*))
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("point_lookup="), s"expected point partitions:\n$plan")
+      df
+    }
+    val cols5 = Seq("record_id", "target_uri", "content_type", "content_length", "payload")
     def key(r: org.apache.spark.sql.Row) = (r.getString(0),
       Option(r.getString(1)), Option(r.getString(2)), r.getLong(3),
       r.getAs[Array[Byte]](4).toSeq)
-    val point = WarcSource.readAt(spark, dir, wanted)
-      .select("record_id", "target_uri", "content_type", "content_length", "payload")
+    val point = pointRead(dir, wanted).select(cols5.map(col): _*)
       .collect().map(key).sortBy(_._1)
-    val full = WarcSource.read(spark, dir)
-      .filter(col("record_id").isin(wanted: _*))
-      .select("record_id", "target_uri", "content_type", "content_length", "payload")
-      .collect().map(key).sortBy(_._1)
+    val full = WarcSource.read(spark, dir).select(cols5.map(col): _*)
+      .collect().map(key).filter(k => wanted.contains(k._1)).sortBy(_._1)
     assert(point.length == 3 && point.toSeq == full.toSeq)
-    // an id absent from the archive simply returns no row
-    assert(WarcSource.readAt(spark, dir, Seq("urn:graft:nope")).count() == 0L)
+    // an id absent from the archive plans no point partition, no row
+    val nope = pointRead(dir, Seq("urn:graft:nope"))
+    assert(nope.queryExecution.executedPlan.toString.contains("point_lookup=0"))
+    assert(nope.count() == 0L)
     // plain .warc indexes too (raw byte ranges)
     val dirP = freshDir()
     WarcSource.writeRecords(rows.take(5).toDF(cols: _*).coalesce(1), dirP,
       gzip = false, cdxIndex = true)
-    val p1 = WarcSource.readAt(spark, dirP, Seq("urn:graft:cdx:002"))
+    val p1 = pointRead(dirP, Seq("urn:graft:cdx:002"))
       .select("record_id", "payload").collect()
     assert(p1.length == 1 && p1.head.getString(0) == "urn:graft:cdx:002"
       && p1.head.getAs[Array[Byte]](1).toSeq == rows(1)._5.toSeq)
@@ -178,7 +185,7 @@ class WarcSourceSpec extends SparkSuite {
     WarcSource.writeRecords(rows.toDF(cols: _*).repartition(2), dir,
       gzip = true, cdxIndex = true)
     val wanted = Seq("urn:graft:pd:003", "urn:graft:pd:021")
-    // the DECLARATIVE spelling — no readAt call, just a filter
+    // the DECLARATIVE spelling: just a filter
     val df = WarcSource.read(spark, dir).filter(col("record_id").isin(wanted: _*))
     val got = df.select("record_id", "target_uri", "content_length", "payload")
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
